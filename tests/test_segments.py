@@ -578,3 +578,133 @@ def test_partial_compact_and_merge_txn_recovery(
         assert _table_rows_fp(spark, wh_a, t) == _table_rows_fp(spark, wh_b, t), t
     assert _decoded_postings_fp(spark, wh_a) == _decoded_postings_fp(spark, wh_b)
     _assert_engines_agree(spark, wh_a, wh_b)
+
+
+def _journal_plans(monkeypatch):
+    """Record every swap journal begin_txn writes, minus the per-run
+    build_id / committed_at stamps; manifests keep max_gen/n_docs/n_tombs."""
+    from moogle_spark.tables import Warehouse
+
+    plans = []
+    orig = Warehouse.begin_txn
+
+    def spy(self, plan):
+        mans = {}
+        for name, m in plan["manifests"].items():
+            m = {k: v for k, v in m.items() if k not in ("build_id", "committed_at")}
+            mans[name] = {k: m[k] for k in ("max_gen", "n_docs", "n_tombs") if k in m}
+        plans.append(
+            {
+                "swaps": [
+                    [s["table"], s["delta"], s["moves"], s["deletes"]]
+                    for s in plan["swaps"]
+                ],
+                "promotes": plan.get("promotes", []),
+                "drops": plan.get("drops", []),
+                "manifests": mans,
+            }
+        )
+        orig(self, plan)
+
+    monkeypatch.setattr(Warehouse, "begin_txn", spy)
+    return plans
+
+
+def _plan(moves, deletes, promotes, drops, manifests, restamped):
+    """One expected journal plan: every per-shard table swaps the same
+    partitions; ``restamped`` tables carry none of the pinned keys."""
+    return {
+        "swaps": [
+            [t, f"{t}_delta", moves, deletes]
+            for t in ["analyzed", "doc_stats", "postings", "doc_lens"]
+        ],
+        "promotes": [[s, s.removesuffix("_next")] for s in promotes],
+        "drops": drops,
+        "manifests": {**manifests, **{t: {} for t in restamped}},
+    }
+
+
+RESTAMPED = ["doc_stats", "doc_lens", "term_stats", "corpus_stats"]
+STATS_NEXT = ["term_stats_next", "corpus_stats_next"]
+CHARACTERIZATION = [
+    # segment upsert: generation 1 holds the six changed docs
+    _plan(
+        moves=[76, 85, 109, 111, 120], deletes=[],
+        promotes=STATS_NEXT + ["tombstones_next"], drops=[],
+        manifests={
+            "analyzed": {"max_gen": 1, "n_docs": 400},
+            "postings": {"n_docs": 400},
+            "tombstones": {"n_tombs": 6},
+        },
+        restamped=RESTAMPED,
+    ),
+    # delete_docs of five keys (two of them generation-resident)
+    _plan(
+        moves=[], deletes=[],
+        promotes=STATS_NEXT + ["tombstones_next"], drops=[],
+        manifests={
+            "analyzed": {"max_gen": 2, "n_docs": 395},
+            "postings": {"n_docs": 395},
+            "tombstones": {"n_tombs": 11},
+        },
+        restamped=RESTAMPED,
+    ),
+    # merge_generations: live generation rows re-homed, dead ones purged
+    _plan(
+        moves=[76, 85, 109], deletes=[111, 120],
+        promotes=["tombstones_next"], drops=[],
+        manifests={
+            "analyzed": {"max_gen": 1, "n_docs": 395},
+            "postings": {"n_docs": 395},
+            "tombstones": {"n_tombs": 9},
+        },
+        restamped=RESTAMPED,
+    ),
+    # compact_segments(max_shards=2): families 12 and 21 folded
+    _plan(
+        moves=[12, 21], deletes=[76, 85],
+        promotes=["tombstones_next"], drops=[],
+        manifests={
+            "analyzed": {"max_gen": 1, "n_docs": 395},
+            "postings": {"n_docs": 395},
+            "tombstones": {"n_tombs": 6},
+        },
+        restamped=RESTAMPED,
+    ),
+    # shard-swap upsert on the second clone
+    _plan(
+        moves=[12, 21, 45, 47, 56], deletes=[],
+        promotes=STATS_NEXT, drops=[],
+        manifests={"analyzed": {"n_docs": 400}, "postings": {"n_docs": 400}},
+        restamped=RESTAMPED,
+    ),
+]
+
+
+def test_write_paths_journal_characterization(spark, tmp_path, base_v1, monkeypatch):
+    """Pins the journal plan of every stable-id write path: a segment
+    upsert, delete_docs (two of its keys live in the new generation),
+    merge_generations, compact_segments(max_shards=2), and a shard-swap
+    upsert on a second clone."""
+    from moogle_spark.build import incremental_build
+    from moogle_spark.segments import compact_segments, merge_generations
+    from moogle_spark.stable import delete_docs
+
+    v1 = _docs_v1(spark).orderBy("path")
+    ups = v1.limit(6).withColumn(
+        "content", F.concat(F.col("content"), F.lit(" charupserttok"))
+    )
+    keys = ["repo", "path", "commit"]
+    dels = ups.select(*keys).limit(2).unionByName(
+        v1.select(*keys).orderBy(F.desc("path")).limit(3)
+    )
+    wh_a = _clone(base_v1, tmp_path, "char_a")
+    wh_b = _clone(base_v1, tmp_path, "char_b")
+
+    plans = _journal_plans(monkeypatch)
+    incremental_build(spark, ups, wh_a, mode="upsert", strategy="segment")
+    delete_docs(spark, dels, wh_a)
+    merge_generations(spark, wh_a)
+    compact_segments(spark, wh_a, max_shards=2)
+    incremental_build(spark, ups, wh_b, mode="upsert", strategy="shards")
+    assert plans == CHARACTERIZATION
