@@ -62,6 +62,7 @@ import math
 import os
 import uuid
 from collections.abc import Iterator
+from itertools import count, repeat
 from dataclasses import dataclass
 
 import numpy as np
@@ -107,6 +108,66 @@ ANALYZED_SCHEMA = (
     "content_sha256 string, shard int, doc_len int, "
     "terms array<string>, tfs array<int>, positions array<int>"
 )
+ANALYZED_COLS = [f.split()[0] for f in ANALYZED_SCHEMA.split(", ")]
+
+
+def analyzed_schema(cols: list[str]) -> str:
+    """The DDL of the ``cols`` subset of ANALYZED_SCHEMA."""
+    return ", ".join(f for f in ANALYZED_SCHEMA.split(", ") if f.split()[0] in cols)
+
+
+def _analyze_fn(acc, cols: list[str], ids=None):
+    """The one tokenize body: a mapInPandas function over
+    (repo, path, commit, lang, content[, shard]) rows that runs the
+    analyzer, content sha256 and doc_len per row and adds one lineage
+    row per partition (doc_count, posting_bytes = summed doc_len,
+    sha256_rollup over the sorted shas) to ``acc``.
+
+    ``ids(pid)``, when given, returns partition ``pid``'s doc_id rule: a
+    callable from the input row's shard (None when the input has no
+    shard column) to its (doc_id, shard).  Without it, an input shard
+    passes through.  ``cols`` picks the emitted ANALYZED_COLS."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pid = TaskContext.get().partitionId()
+        rule = ids(pid) if ids is not None else None
+        shas: list[str] = []
+        dl_sum = 0
+        for pdf in batches:
+            out = {c: [] for c in cols}
+            shards = pdf["shard"] if "shard" in pdf.columns else repeat(None)
+            for repo, path, commit, lang, content, shard in zip(
+                pdf["repo"], pdf["path"], pdf["commit"], pdf["lang"],
+                pdf["content"], shards,
+            ):
+                content = content or ""
+                tfp = term_freqs_positions(content)
+                terms = sorted(tfp)
+                sha = hashlib.sha256(content.encode("utf-8")).hexdigest()
+                dl = sum(t[0] for t in tfp.values())
+                shas.append(sha)
+                dl_sum += dl
+                doc_id = None
+                if rule is not None:
+                    doc_id, shard = rule(shard)
+                row = {
+                    "doc_id": doc_id, "repo": repo, "path": path,
+                    "commit": commit, "lang": lang, "content_sha256": sha,
+                    "shard": None if shard is None else int(shard),
+                    "doc_len": dl, "terms": terms,
+                    "tfs": [tfp[t][0] for t in terms],
+                    "positions": [p for t in terms for p in tfp[t][1]],
+                }
+                for c in cols:
+                    out[c].append(row[c])
+            yield pd.DataFrame(out, columns=cols)
+        rollup = hashlib.sha256(",".join(sorted(shas)).encode()).hexdigest()
+        acc.add(
+            {pid: {"partition_id": pid, "doc_count": len(shas),
+                   "posting_bytes": dl_sum, "sha256_rollup": rollup}}
+        )
+
+    return run
 
 # dls = varint doc lengths inline per block (impact-index style norms):
 # query-time scoring needs (tf, dl) per posting, so keeping dl beside tf
@@ -459,47 +520,8 @@ def incremental_build(
     sc = spark.sparkContext
     tok_acc = sc.accumulator({}, _LineageAccParam())
 
-    def analyze_only(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        n = 0
-        dl_sum = 0
-        shas: list[str] = []
-        for pdf in batches:
-            out = {c: [] for c in keys + carry}
-            for repo, path, commit, lang, content in zip(
-                pdf["repo"], pdf["path"], pdf["commit"], pdf["lang"], pdf["content"]
-            ):
-                content = content or ""
-                tfp = term_freqs_positions(content)
-                terms = sorted(tfp)
-                sha = hashlib.sha256(content.encode("utf-8")).hexdigest()
-                dl = sum(t[0] for t in tfp.values())
-                n += 1
-                dl_sum += dl
-                shas.append(sha)
-                out["repo"].append(repo)
-                out["path"].append(path)
-                out["commit"].append(commit)
-                out["lang"].append(lang)
-                out["content_sha256"].append(sha)
-                out["doc_len"].append(dl)
-                out["terms"].append(terms)
-                out["tfs"].append([tfp[t][0] for t in terms])
-                out["positions"].append([p for t in terms for p in tfp[t][1]])
-            yield pd.DataFrame(out)
-        rollup = hashlib.sha256(",".join(sorted(shas)).encode()).hexdigest()
-        tok_acc.add(
-            {pid: {"partition_id": pid, "doc_count": n,
-                   "posting_bytes": dl_sum, "sha256_rollup": rollup}}
-        )
-
-    tok_schema = (
-        "repo string, path string, commit string, lang string, "
-        "content_sha256 string, doc_len int, "
-        "terms array<string>, tfs array<int>, positions array<int>"
-    )
     analyzed_new = changed.select(*keys, "lang", "content").mapInPandas(
-        analyze_only, tok_schema
+        _analyze_fn(tok_acc, keys + carry), analyzed_schema(keys + carry)
     )
     # persist BEFORE the range repartition: repartitionByRange runs a
     # separate range-boundary sampling job over its input, which would
@@ -647,48 +669,16 @@ def _stage_analyzed(
     # tokenize+write — no read-back scan job afterwards.
     lin_acc = sc.accumulator({}, _LineageAccParam())
 
-    def analyze(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        next_id = b_off.value.get(pid, 0) + 1  # doc_ids are 1-based
-        part_shas: list[str] = []
-        part_dl = 0
-        for pdf in batches:
-            out = {
-                "doc_id": [], "repo": [], "path": [], "commit": [], "lang": [],
-                "content_sha256": [], "shard": [], "doc_len": [],
-                "terms": [], "tfs": [], "positions": [],
-            }
-            for repo, path, commit, lang, content in zip(
-                pdf["repo"], pdf["path"], pdf["commit"], pdf["lang"], pdf["content"]
-            ):
-                content = content or ""
-                tfp = term_freqs_positions(content)
-                terms = sorted(tfp)
-                doc_id = next_id
-                next_id += 1
-                sha = hashlib.sha256(content.encode("utf-8")).hexdigest()
-                dl = sum(t[0] for t in tfp.values())
-                part_shas.append(sha)
-                part_dl += dl
-                out["doc_id"].append(doc_id)
-                out["repo"].append(repo)
-                out["path"].append(path)
-                out["commit"].append(commit)
-                out["lang"].append(lang)
-                out["content_sha256"].append(sha)
-                out["shard"].append((doc_id - 1) // shard_size)
-                out["doc_len"].append(dl)
-                out["terms"].append(terms)
-                out["tfs"].append([tfp[t][0] for t in terms])
-                out["positions"].append([p for t in terms for p in tfp[t][1]])
-            yield pd.DataFrame(out)
-        rollup = hashlib.sha256(",".join(sorted(part_shas)).encode()).hexdigest()
-        lin_acc.add(
-            {pid: {"partition_id": pid, "doc_count": len(part_shas),
-                   "posting_bytes": part_dl, "sha256_rollup": rollup}}
-        )
+    def ids(pid: int):
+        next_id = count(b_off.value.get(pid, 0) + 1)  # doc_ids are 1-based
 
-    analyzed = srt.mapInPandas(analyze, ANALYZED_SCHEMA)
+        def rule(_shard):
+            doc_id = next(next_id)
+            return doc_id, (doc_id - 1) // shard_size
+
+        return rule
+
+    analyzed = srt.mapInPandas(_analyze_fn(lin_acc, ANALYZED_COLS, ids), ANALYZED_SCHEMA)
     # sum_dl is in the accumulator once the data write finishes, so the
     # manifest (the commit marker) carries it atomically — a kill can
     # never leave a committed-but-rollup-less stage behind.

@@ -45,10 +45,10 @@ bound as the shard-scoped path — and it bounds the query-time overhead
 ``auto_compact_ratio`` triggers it once tombstones exceed a fraction of
 the live corpus.
 
-Commit protocol: the same single fsync'd _TXN journal as stable.py —
-every new table is staged committed first, one journal records the
-partition moves/deletes, table promotes/drops and final manifests, and
-recover_txn() replays it idempotently from every entry point.
+Commit protocol: every write here goes through stable.commit_delta, the
+one staged-then-journaled swap all stable-id write paths share; each
+function below only picks its delta rows, partition deletes, tombstone
+frame and manifest overrides.
 
 Reference parity: the staleness-gate semantics are the reference's
 (services/indexer/main.py:140-143 — skip unchanged docs entirely); the
@@ -59,9 +59,7 @@ north_star's 10^12-file incremental cadence requires.
 
 from __future__ import annotations
 
-import os
 import time
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -69,14 +67,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import codec
-from .build import (
-    DOWNSTREAM_STAGES,
-    POSTINGS_SCHEMA,
-    BuildInfo,
-    _stage_doc_lens,
-    _stage_doc_stats,
-    _stage_postings,
-)
+from .build import DOWNSTREAM_STAGES, POSTINGS_SCHEMA, BuildInfo
+from .stable import STRIDE, _shard_parts, commit_delta
 from .tables import Warehouse, locked
 
 # Reserved mask term: sorts before every real token ("\x00" < "0"), and
@@ -162,9 +154,8 @@ def segment_tail(
     changed_an: DataFrame,
     gone: DataFrame,
     n_changed: int,
-    dl_changed: int,
     n_gone: int,
-    dl_gone: int,
+    live: dict,
     stage_secs: dict,
     auto_compact_ratio: float | None = None,
     maintenance: str = "compact",
@@ -172,169 +163,32 @@ def segment_tail(
     """The segment-strategy tail of incremental_build_stable: the gate
     has already run (changed_an = tokenized changed docs with their BASE
     shard column; gone = the live analyzed rows being replaced/removed,
-    carrying their physical shard + doc_id).  Writes generation
-    max_gen+1 + tombstones and swaps via one _TXN journal."""
-    from .stable import (
-        KEYS,
-        STRIDE,
-        _delta_term_stats,
-        _write_corpus_next,
-    )
-
+    carrying their physical shard + doc_id; live = the new n_docs and
+    sum_dl).  Commits generation max_gen+1 plus the tombstones, then
+    runs the ``auto_compact_ratio`` maintenance."""
     man = wh.manifest("analyzed")
     n_shards = int(man["n_shards"])
     new_gen = int(man.get("max_gen", 0)) + 1
-    n_docs_new = int(man["n_docs"]) - n_gone + n_changed
-    sum_dl_new = int(man["sum_dl"]) - dl_gone + dl_changed
-    new_build_id = uuid.uuid4().hex
-
-    # ---- analyzed_delta: ONLY the changed docs, under generation
-    # shards.  Rank assignment is pure JVM (row_number over the segment
-    # shard | KEYS) — the same protocol as the shard path's delta, but
-    # over O(churn) rows instead of O(touched shards).
-    t1 = time.time()
-    from pyspark.sql import Observation
-    from pyspark.sql.window import Window
-
-    no_id = ["repo", "path", "commit", "lang", "content_sha256", "shard",
-             "doc_len", "terms", "tfs", "positions"]
     seg = changed_an.withColumn(
         "shard", (F.lit(new_gen * n_shards) + F.col("shard")).cast("int")
     )
-    wnd = Window.partitionBy("shard").orderBy(*KEYS)
-    rank_obs = Observation("segment_rank_guard")
-    delta_analyzed = (
-        seg.withColumn("rank", F.row_number().over(wnd))
-        .observe(rank_obs, F.max("rank").alias("max_rank"))
-        .select(
-            (F.col("shard").cast("long") * F.lit(STRIDE) + F.col("rank")).alias(
-                "doc_id"
-            ),
-            *no_id,
-        )
-    )
-    wh.write(
-        delta_analyzed,
-        "analyzed_delta",
-        stage="analyzed",
-        partition_by=["shard"],
-        meta={
-            "n_docs": n_docs_new,
-            "sum_dl": sum_dl_new,
-            "n_shards": n_shards,
-            "shard_size": STRIDE,
-            "doc_id_mode": "stable",
-            "build_id": new_build_id,
-            "segment_gen": new_gen,
-        },
-    )
-    if int(rank_obs.get["max_rank"] or 0) >= STRIDE:
-        # staged delta only — nothing journaled, committed tables intact
-        raise OverflowError(
-            f"a segment shard exceeds STRIDE={STRIDE} docs; rebuild with "
-            "more shards"
-        )
-    wh.append_lineage_rows("analyzed", wh.footer_lineage_rows("analyzed_delta"))
-    stage_secs["analyzed"] = round(time.time() - t1, 2)
-
-    # ---- exact LIVE-corpus stats (identical deltas to the shard path)
-    t1 = time.time()
-    n_terms = _delta_term_stats(spark, wh, changed_an, gone, new_build_id)
-    stage_secs["term_stats"] = round(time.time() - t1, 2)
-    _write_corpus_next(wh, n_docs_new, sum_dl_new, n_terms, new_build_id)
-
-    # ---- downstream deltas over the NEW GENERATION only (O(churn))
-    delta_df = wh.read(spark, "analyzed_delta")
-    t1 = time.time()
-    _stage_doc_stats(spark, delta_df, wh, dst="doc_stats_delta")
-    stage_secs["doc_stats"] = round(time.time() - t1, 2)
-    t1 = time.time()
-    _stage_postings(spark, wh, src="analyzed_delta", dst="postings_delta")
-    stage_secs["postings"] = round(time.time() - t1, 2)
-    t1 = time.time()
-    _stage_doc_lens(spark, delta_df, wh, STRIDE, dst="doc_lens_delta")
-    stage_secs["doc_lens"] = round(time.time() - t1, 2)
-
-    # ---- tombstones_next = committed tombstones ∪ the replaced/removed
-    # docs' ids.  `gone` rows come from the LIVE view, so an id is never
-    # tombstoned twice; their shard column is the dead row's PHYSICAL
-    # shard (a doc added in gen 1 and changed in gen 2 masks its gen-1 id).
-    t1 = time.time()
+    # tombstones = committed tombstones ∪ the replaced/removed docs' ids.
+    # `gone` rows come from the LIVE view, so an id is never tombstoned
+    # twice; their shard column is the dead row's PHYSICAL shard (a doc
+    # added in gen 1 and changed in gen 2 masks its gen-1 id).
     dead = gone.select(F.col("shard").cast("int").alias("shard"), "doc_id")
+    n_tombs = n_gone
     if _has_tombstones(wh):
         dead = wh.read(spark, "tombstones").unionByName(dead)
-    tomb_obs = Observation("tombstones_next")
-    dead = dead.observe(tomb_obs, F.count(F.lit(1)).alias("n"))
-    wh.write(
-        dead,
-        "tombstones_next",
-        stage="tombstones",
-        sort_by=["shard", "doc_id"],
-        meta={"analyzed_ref": new_build_id},
-        meta_fn=lambda: {"n_tombs": int(tomb_obs.get["n"])},
-    )
-    n_tombs = int(wh.manifest("tombstones_next")["n_tombs"])
-    stage_secs["tombstones"] = round(time.time() - t1, 2)
-    changed_an.unpersist()
-    gone.unpersist()
-
-    # ---- single-journal swap: ADD the generation partitions (no base
-    # partition is touched), promote the three whole-table refreshes
-    now = time.time()
-    from .stable import _DELTA_TABLES
-
-    swaps = []
-    for table, delta in _DELTA_TABLES:
-        droot = wh.path(delta)
-        present = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(droot)
-            if d.startswith("shard=")
-        )
-        swaps.append({"table": table, "delta": delta, "moves": present, "deletes": []})
-    manifests: dict[str, dict] = {}
-    am = dict(man)
-    am.update(
-        {
-            "n_docs": n_docs_new,
-            "sum_dl": sum_dl_new,
-            "build_id": new_build_id,
-            "max_gen": new_gen,
-            "committed_at": now,
-        }
-    )
-    manifests["analyzed"] = am
-    for t in ["doc_stats", "postings", "doc_lens"]:
-        m = dict(wh.manifest(t))
-        m.update({"analyzed_ref": new_build_id, "committed_at": now})
-        if t == "postings":
-            m["n_docs"] = n_docs_new
-        manifests[t] = m
-    promotes = [
-        ["term_stats_next", "term_stats"],
-        ["corpus_stats_next", "corpus_stats"],
-        ["tombstones_next", "tombstones"],
-    ]
-    for src, dst in promotes:
-        m = dict(wh.manifest(src))
-        m["table"] = dst
-        manifests[dst] = m
-    wh.begin_txn({"swaps": swaps, "promotes": promotes, "manifests": manifests})
-    wh.recover_txn()
-    stage_secs["swap"] = round(time.time() - now, 2)
-
-    info = BuildInfo(
-        n_docs_new,
-        n_shards,
-        STRIDE,
-        stages_run=["analyzed", *DOWNSTREAM_STAGES, "tombstones"],
-        stages_skipped=[],
-        stage_secs=stage_secs,
+        n_tombs += int(wh.manifest("tombstones")["n_tombs"])
+    info = commit_delta(
+        spark, wh, seg, stage_secs,
+        tombs=dead, stats=(changed_an, gone), max_gen=new_gen, **live,
     )
     if (
         auto_compact_ratio is not None
-        and n_docs_new > 0
-        and n_tombs / n_docs_new > auto_compact_ratio
+        and info.n_docs > 0
+        and n_tombs / info.n_docs > auto_compact_ratio
     ):
         t1 = time.time()
         if maintenance == "tiered":
@@ -346,7 +200,7 @@ def segment_tail(
             # max_shards order (tombstones first).
             merge_generations(spark, wh)
             _seg, tomb_counts = _family_census(spark, wh, n_shards)
-            target = auto_compact_ratio * n_docs_new / 2
+            target = auto_compact_ratio * info.n_docs / 2
             remaining = sum(tomb_counts.values())
             k = 0
             for _b, n in sorted(tomb_counts.items(), key=lambda kv: -kv[1]):
@@ -406,12 +260,10 @@ def compact_segments(
 
     Pure JVM over committed analyzed rows (no re-tokenize): the live rows
     of each selected base FAMILY (a base shard plus its generation
-    partitions ``gen*n_shards + b``) are re-ranked per base shard — the
-    same row_number-over-(shard | keys) protocol as every other delta —
-    and their four tables' partitions swapped in; the selected families'
-    generation partitions and tombstones are deleted in the SAME journal.
-    term_stats/corpus_stats are already exact for the live corpus, so
-    only their manifests are restamped (analyzed_ref).
+    partitions ``gen*n_shards + b``) become a commit_delta under their
+    base shard, which also deletes the family's generation partitions
+    and its tombstones.  term_stats/corpus_stats are already exact for
+    the live corpus, so commit_delta only restamps them.
 
     Selection (the tiered-maintenance knob — at 100 TB a full compaction
     after uniform churn rewrites every base shard, so bound each
@@ -427,8 +279,6 @@ def compact_segments(
     place — queries stay exact throughout (the mask machinery is
     unchanged) and repeated ``max_shards=K`` calls converge to the full
     compact."""
-    from .stable import _STAGING, KEYS, STRIDE
-
     if shards is not None and max_shards is not None:
         raise ValueError("pass at most one of shards= / max_shards=")
     wh = wh if isinstance(wh, Warehouse) else Warehouse(wh)
@@ -437,20 +287,14 @@ def compact_segments(
     if man.get("doc_id_mode", "rank") != "stable":
         raise ValueError("compact_segments requires a stable-id warehouse")
     n_shards = int(man["n_shards"])
-    max_gen = int(man.get("max_gen", 0))
-    has_tomb = _has_tombstones(wh)
-    if max_gen == 0 and not has_tomb:
-        return BuildInfo(
-            int(man["n_docs"]), n_shards, STRIDE,
-            stages_run=[],
-            stages_skipped=["analyzed", *DOWNSTREAM_STAGES],
-            stage_secs={},
-        )
-    stage_secs: dict[str, float] = {}
-    for t in _STAGING:
-        wh.drop(t)
-
-    live = live_analyzed(spark, wh)
+    noop = BuildInfo(
+        int(man["n_docs"]), n_shards, STRIDE,
+        stages_run=[],
+        stages_skipped=["analyzed", *DOWNSTREAM_STAGES],
+        stage_secs={},
+    )
+    if int(man.get("max_gen", 0)) == 0 and not _has_tombstones(wh):
+        return noop
     # dirty base families: any family owning a segment row or a
     # tombstoned row (tombstone shard is the dead row's physical shard,
     # whose base family is shard % n_shards)
@@ -460,177 +304,42 @@ def compact_segments(
         bad = sorted(set(shards) - set(range(n_shards)))
         if bad:
             raise ValueError(f"not base shards (n_shards={n_shards}): {bad}")
-        touched = sorted(set(shards) & set(dirty))
+        sel = set(shards) & set(dirty)
     elif max_shards is not None:
         by_dirt = sorted(
             dirty,
             key=lambda b: (tomb_counts.get(b, 0), seg_counts.get(b, 0), -b),
             reverse=True,
         )
-        touched = sorted(by_dirt[: max(0, max_shards)])
+        sel = set(by_dirt[: max(0, max_shards)])
     else:
-        touched = dirty
-    partial = len(touched) < len(dirty)
-    if not touched:
-        return BuildInfo(
-            int(man["n_docs"]), n_shards, STRIDE,
-            stages_run=[],
-            stages_skipped=["analyzed", *DOWNSTREAM_STAGES],
-            stage_secs={},
-        )
-    new_build_id = uuid.uuid4().hex
+        sel = set(dirty)
+    if not sel:
+        return noop
 
-    # ---- re-rank the touched base shards' LIVE membership (pure JVM)
-    t1 = time.time()
-    from pyspark.sql import Observation
-    from pyspark.sql.window import Window
-
-    no_id = ["repo", "path", "commit", "lang", "content_sha256", "shard",
-             "doc_len", "terms", "tfs", "positions"]
-    delta_rows = (
-        live.withColumn("shard", F.pmod("shard", F.lit(n_shards)).cast("int"))
-        .filter(F.col("shard").isin([int(s) for s in touched]))
+    fam = F.pmod("shard", F.lit(n_shards)).cast("int")
+    rows = live_analyzed(spark, wh).withColumn("shard", fam).filter(
+        F.col("shard").isin(sorted(sel))
     )
-    wnd = Window.partitionBy("shard").orderBy(*KEYS)
-    rank_obs = Observation("compact_rank_guard")
-    delta_analyzed = (
-        delta_rows.withColumn("rank", F.row_number().over(wnd))
-        .observe(rank_obs, F.max("rank").alias("max_rank"))
-        .select(
-            (F.col("shard").cast("long") * F.lit(STRIDE) + F.col("rank")).alias(
-                "doc_id"
-            ),
-            *no_id,
-        )
-    )
-    wh.write(
-        delta_analyzed,
-        "analyzed_delta",
-        stage="analyzed",
-        partition_by=["shard"],
-        meta={
-            "n_docs": int(man["n_docs"]),
-            "sum_dl": int(man["sum_dl"]),
-            "n_shards": n_shards,
-            "shard_size": STRIDE,
-            "doc_id_mode": "stable",
-            "build_id": new_build_id,
-        },
-    )
-    if int(rank_obs.get["max_rank"] or 0) >= STRIDE:
-        raise OverflowError(
-            f"a shard exceeds STRIDE={STRIDE} docs; rebuild with more shards"
-        )
-    wh.append_lineage_rows("analyzed", wh.footer_lineage_rows("analyzed_delta"))
-    stage_secs["analyzed"] = round(time.time() - t1, 2)
-
-    delta_df = wh.read(spark, "analyzed_delta")
-    t1 = time.time()
-    _stage_doc_stats(spark, delta_df, wh, dst="doc_stats_delta")
-    stage_secs["doc_stats"] = round(time.time() - t1, 2)
-    t1 = time.time()
-    _stage_postings(spark, wh, src="analyzed_delta", dst="postings_delta")
-    stage_secs["postings"] = round(time.time() - t1, 2)
-    t1 = time.time()
-    _stage_doc_lens(spark, delta_df, wh, STRIDE, dst="doc_lens_delta")
-    stage_secs["doc_lens"] = round(time.time() - t1, 2)
-
-    # ---- remaining tombstones (partial only): keep the un-selected
-    # families' masks; a selected family's masks are realized by the fold
-    remaining_tombs = sum(n for b, n in tomb_counts.items() if b not in set(touched))
-    promotes: list[list[str]] = []
-    drops: list[str] = []
-    if has_tomb:
-        if remaining_tombs > 0:
-            t1 = time.time()
-            keep = wh.read(spark, "tombstones").filter(
-                ~F.pmod("shard", F.lit(n_shards)).cast("int").isin(
-                    [int(b) for b in touched]
-                )
-            )
-            wh.write(
-                keep,
-                "tombstones_next",
-                stage="tombstones",
-                sort_by=["shard", "doc_id"],
-                meta={"analyzed_ref": new_build_id, "n_tombs": remaining_tombs},
-            )
-            promotes.append(["tombstones_next", "tombstones"])
-            stage_secs["tombstones"] = round(time.time() - t1, 2)
-        else:
-            drops.append("tombstones")
-
-    # ---- single-journal swap: replace the selected base partitions,
-    # delete the selected families' generation partitions (all of them,
-    # on a full compact) and fold/trim the tombstones
-    now = time.time()
-    from .stable import _DELTA_TABLES
-
-    sel = set(touched)
-    swaps = []
-    remaining_gens: list[int] = []
-    for table, delta in _DELTA_TABLES:
-        droot = wh.path(delta)
-        troot = wh.path(table)
-        present = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(droot)
-            if d.startswith("shard=")
-        )
-        all_parts = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(troot)
-            if d.startswith("shard=")
-        ]
-        seg_parts = sorted(
-            v for v in all_parts if v >= n_shards and v % n_shards in sel
-        )
-        if table == "analyzed":
-            remaining_gens = [
-                v // n_shards
-                for v in all_parts
-                if v >= n_shards and v % n_shards not in sel
-            ]
-        swaps.append(
-            {
-                "table": table,
-                "delta": delta,
-                "moves": present,
-                "deletes": sorted(sel - set(present)) + seg_parts,
-            }
-        )
-    new_max_gen = max(remaining_gens, default=0) if partial else 0
-    manifests: dict[str, dict] = {}
-    am = dict(man)
-    am.update(
-        {"build_id": new_build_id, "max_gen": new_max_gen, "committed_at": now}
-    )
-    manifests["analyzed"] = am
-    for t in ["doc_stats", "postings", "doc_lens", "term_stats", "corpus_stats"]:
-        m = dict(wh.manifest(t))
-        m.update({"analyzed_ref": new_build_id, "committed_at": now})
-        manifests[t] = m
-    for src, dst in promotes:
-        m = dict(wh.manifest(src))
-        m["table"] = dst
-        manifests[dst] = m
-    wh.begin_txn(
-        {
-            "swaps": swaps,
-            "promotes": promotes,
-            "drops": drops,
-            "manifests": manifests,
-        }
-    )
-    wh.recover_txn()
-    stage_secs["swap"] = round(time.time() - now, 2)
-    return BuildInfo(
-        int(man["n_docs"]),
-        n_shards,
-        STRIDE,
-        stages_run=["analyzed", "doc_stats", "postings", "doc_lens"],
-        stages_skipped=["term_stats", "corpus_stats"],
-        stage_secs=stage_secs,
+    # a selected family's masks are realized by the fold; the others stay
+    tombs = None
+    if tomb_counts:
+        tombs = "drop"
+        if tomb_counts.keys() - sel:
+            tombs = wh.read(spark, "tombstones").filter(~fam.isin(sorted(sel)))
+    # max_gen: the highest generation an un-selected family still holds
+    gens = [
+        v // n_shards
+        for v in _shard_parts(wh.path("analyzed"))
+        if v >= n_shards and v % n_shards not in sel
+    ]
+    return commit_delta(
+        spark, wh, rows, {},
+        drop_parts=lambda present, existing: sorted(sel - set(present)) + [
+            v for v in existing if v >= n_shards and v % n_shards in sel
+        ],
+        tombs=tombs,
+        max_gen=max(gens, default=0),
     )
 
 
@@ -644,19 +353,16 @@ def merge_generations(spark: SparkSession, wh: str | Warehouse) -> BuildInfo:
     partition count grows per run) and their tombstones.  A full
     compaction bounds both but costs O(touched base shards) — after
     uniform churn, the whole base.  This merge costs **O(total segment
-    rows)** instead: the LIVE rows of every generation are re-ranked
-    under generation-1 shards (``n_shards + base_family``), the four
-    tables' gen partitions are replaced by the merged ones, and the
-    tombstones that masked GENERATION rows are realized (dropped), all
-    in one journal.  Base partitions and base-masking tombstones are
-    byte-untouched; term_stats/corpus_stats are already live-exact and
-    only restamped.
+    rows)** instead: the LIVE rows of every generation become a
+    commit_delta under generation-1 shards (``n_shards + base_family``)
+    that replaces every older generation partition and drops the
+    tombstones that masked GENERATION rows.  Base partitions and
+    base-masking tombstones are byte-untouched; term_stats/corpus_stats
+    are already live-exact and only restamped.
 
     Maintenance policy at scale: merge often (cheap, bounds generation
     count), partially compact the dirtiest families on a cadence
     (``compact_segments(max_shards=K)``), fully compact rarely."""
-    from .stable import _STAGING, KEYS, STRIDE
-
     wh = wh if isinstance(wh, Warehouse) else Warehouse(wh)
     wh.recover_txn()
     man = wh.manifest("analyzed")
@@ -664,11 +370,12 @@ def merge_generations(spark: SparkSession, wh: str | Warehouse) -> BuildInfo:
         raise ValueError("merge_generations requires a stable-id warehouse")
     n_shards = int(man["n_shards"])
     max_gen = int(man.get("max_gen", 0))
-    gen_tombs = 0
+    gen_tombs = base_tombs = 0
     if _has_tombstones(wh):
         gen_tombs = wh.read(spark, "tombstones").filter(
             F.col("shard") >= n_shards
         ).count()
+        base_tombs = int(wh.manifest("tombstones")["n_tombs"]) - gen_tombs
     if max_gen == 0 or (max_gen == 1 and gen_tombs == 0):
         return BuildInfo(
             int(man["n_docs"]), n_shards, STRIDE,
@@ -676,147 +383,21 @@ def merge_generations(spark: SparkSession, wh: str | Warehouse) -> BuildInfo:
             stages_skipped=["analyzed", *DOWNSTREAM_STAGES],
             stage_secs={},
         )
-    stage_secs: dict[str, float] = {}
-    for t in _STAGING:
-        wh.drop(t)
-    new_build_id = uuid.uuid4().hex
-
-    # ---- live segment rows only, re-homed under generation 1
-    t1 = time.time()
-    from pyspark.sql import Observation
-    from pyspark.sql.window import Window
-
-    no_id = ["repo", "path", "commit", "lang", "content_sha256", "shard",
-             "doc_len", "terms", "tfs", "positions"]
-    seg_live = live_analyzed(spark, wh).filter(F.col("shard") >= n_shards)
-    merged = seg_live.withColumn(
-        "shard",
-        (F.lit(n_shards) + F.pmod("shard", F.lit(n_shards))).cast("int"),
+    rows = live_analyzed(spark, wh).filter(F.col("shard") >= n_shards).withColumn(
+        "shard", (F.lit(n_shards) + F.pmod("shard", F.lit(n_shards))).cast("int")
     )
-    wnd = Window.partitionBy("shard").orderBy(*KEYS)
-    rank_obs = Observation("merge_rank_guard")
-    delta_analyzed = (
-        merged.withColumn("rank", F.row_number().over(wnd))
-        .observe(rank_obs, F.max("rank").alias("max_rank"))
-        .select(
-            (F.col("shard").cast("long") * F.lit(STRIDE) + F.col("rank")).alias(
-                "doc_id"
-            ),
-            *no_id,
-        )
-    )
-    wh.write(
-        delta_analyzed,
-        "analyzed_delta",
-        stage="analyzed",
-        partition_by=["shard"],
-        meta={
-            "n_docs": int(man["n_docs"]),
-            "sum_dl": int(man["sum_dl"]),
-            "n_shards": n_shards,
-            "shard_size": STRIDE,
-            "doc_id_mode": "stable",
-            "build_id": new_build_id,
-        },
-    )
-    if int(rank_obs.get["max_rank"] or 0) >= STRIDE:
-        raise OverflowError(
-            f"a merged generation shard exceeds STRIDE={STRIDE} docs; "
-            "compact instead"
-        )
-    wh.append_lineage_rows("analyzed", wh.footer_lineage_rows("analyzed_delta"))
-    stage_secs["analyzed"] = round(time.time() - t1, 2)
-
-    delta_df = wh.read(spark, "analyzed_delta")
-    t1 = time.time()
-    _stage_doc_stats(spark, delta_df, wh, dst="doc_stats_delta")
-    stage_secs["doc_stats"] = round(time.time() - t1, 2)
-    t1 = time.time()
-    _stage_postings(spark, wh, src="analyzed_delta", dst="postings_delta")
-    stage_secs["postings"] = round(time.time() - t1, 2)
-    t1 = time.time()
-    _stage_doc_lens(spark, delta_df, wh, STRIDE, dst="doc_lens_delta")
-    stage_secs["doc_lens"] = round(time.time() - t1, 2)
-
-    # ---- base-masking tombstones survive; gen masks are realized
-    base_tombs = 0
-    promotes: list[list[str]] = []
-    drops: list[str] = []
-    if _has_tombstones(wh):
-        t1 = time.time()
-        n_tombs = int(wh.manifest("tombstones")["n_tombs"])
-        base_tombs = n_tombs - gen_tombs
-        if base_tombs > 0:
-            keep = wh.read(spark, "tombstones").filter(F.col("shard") < n_shards)
-            wh.write(
-                keep,
-                "tombstones_next",
-                stage="tombstones",
-                sort_by=["shard", "doc_id"],
-                meta={"analyzed_ref": new_build_id, "n_tombs": base_tombs},
-            )
-            promotes.append(["tombstones_next", "tombstones"])
-        else:
-            drops.append("tombstones")
-        stage_secs["tombstones"] = round(time.time() - t1, 2)
-
-    # ---- single-journal swap: merged gen-1 partitions in, every older
-    # generation partition out; base partitions untouched
-    now = time.time()
-    from .stable import _DELTA_TABLES
-
-    swaps = []
-    for table, delta in _DELTA_TABLES:
-        droot = wh.path(delta)
-        troot = wh.path(table)
-        present = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(droot)
-            if d.startswith("shard=")
-        )
-        stale_gens = sorted(
-            v
-            for v in (
-                int(d.split("=", 1)[1])
-                for d in os.listdir(troot)
-                if d.startswith("shard=")
-            )
-            if v >= n_shards and v not in set(present)
-        )
-        swaps.append(
-            {"table": table, "delta": delta, "moves": present,
-             "deletes": stale_gens}
-        )
-    new_max_gen = 1 if any(s["moves"] for s in swaps) else 0
-    manifests: dict[str, dict] = {}
-    am = dict(man)
-    am.update(
-        {"build_id": new_build_id, "max_gen": new_max_gen, "committed_at": now}
-    )
-    manifests["analyzed"] = am
-    for t in ["doc_stats", "postings", "doc_lens", "term_stats", "corpus_stats"]:
-        m = dict(wh.manifest(t))
-        m.update({"analyzed_ref": new_build_id, "committed_at": now})
-        manifests[t] = m
-    for src, dst in promotes:
-        m = dict(wh.manifest(src))
-        m["table"] = dst
-        manifests[dst] = m
-    wh.begin_txn(
-        {
-            "swaps": swaps,
-            "promotes": promotes,
-            "drops": drops,
-            "manifests": manifests,
-        }
-    )
-    wh.recover_txn()
-    stage_secs["swap"] = round(time.time() - now, 2)
-    return BuildInfo(
-        int(man["n_docs"]),
-        n_shards,
-        STRIDE,
-        stages_run=["analyzed", "doc_stats", "postings", "doc_lens"],
-        stages_skipped=["term_stats", "corpus_stats"],
-        stage_secs=stage_secs,
+    # base-masking tombstones survive; generation masks are realized
+    tombs = None
+    if gen_tombs or base_tombs:
+        tombs = "drop"
+        if base_tombs:
+            tombs = wh.read(spark, "tombstones").filter(F.col("shard") < n_shards)
+    return commit_delta(
+        spark, wh, rows, {},
+        drop_parts=lambda present, existing: [
+            v for v in existing if v >= n_shards and v not in present
+        ],
+        tombs=tombs,
+        gen=1,
+        max_gen=0,
     )

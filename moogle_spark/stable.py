@@ -31,37 +31,36 @@ manifest — at 100 TB pick it so a shard's analyzed rows fit an executor
 (e.g. 100k shards for 10^12 docs); re-sharding is an explicit
 force-rebuild.
 
-Commit protocol: all delta tables are staged as committed *_delta /
-*_next tables first; then ONE fsync'd _TXN.json journal (tables.py
-begin_txn/recover_txn) records the partition moves + promotes + final
-manifests and is replayed idempotently by every entry point, so a kill
-at any moment leaves either the old index or the new one — never a mix.
+Commit protocol: every stable-id write path (this shard swap, and the
+segment upsert, merge and compaction in segments.py) commits through
+commit_delta: staged *_delta / *_next tables, then ONE journaled swap,
+so a kill at any moment leaves either the old index or the new one.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 import time
 import uuid
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark import StorageLevel, TaskContext
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
-from .analyzer import term_freqs_positions
 from .build import (
+    ANALYZED_COLS,
     ANALYZED_SCHEMA,
     DOWNSTREAM_STAGES,
     NSALT,
     BuildInfo,
+    _analyze_fn,
     _downstream_current,
     _LineageAccParam,
     _stage_doc_lens,
     _stage_doc_stats,
     _stage_postings,
+    analyzed_schema,
     default_shards,
 )
 from .tables import Warehouse, locked
@@ -73,6 +72,7 @@ STRIDE = 1 << 33
 
 KEYS = ["repo", "path", "commit"]
 GATE = KEYS + ["lang", "content_sha256"]
+NO_ID = ANALYZED_COLS[1:]  # an analyzed row before commit_delta ranks it
 _DELTA_TABLES = [
     ("analyzed", "analyzed_delta"),
     ("doc_stats", "doc_stats_delta"),
@@ -98,70 +98,31 @@ def _sha_col():
     return F.sha2(F.encode(F.coalesce(F.col("content"), F.lit("")), "utf-8"), 256)
 
 
-def _analyze_rank_fn(acc, shard_size_guard: int = STRIDE):
-    """mapInPandas body: rows arrive sorted by (shard, repo, path, commit)
-    with every shard wholly inside one partition (hash repartition on the
-    shard column), so within-shard rank is a running per-shard counter —
-    no global offset pass, no window — and the same pass runs the
-    analyzer (one Python sweep total).  The incremental delta path does
-    NOT use this: its rows already carry terms, so it assigns the
-    identical ranks with a pure-JVM row_number window instead
-    (incremental_build_stable)."""
+def _stable_ids(pid: int):
+    """doc_id rule of the one-pass stable build (build._analyze_fn):
+    rows arrive sorted by (shard, repo, path, commit) with every shard
+    wholly inside one partition (_shard_grouped), so within-shard rank
+    is a running per-shard counter — no global offset pass, no window.
+    The delta paths assign the identical ranks in commit_delta."""
+    stride = STRIDE
+    next_rank: dict[int, int] = {}
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        next_rank: dict[int, int] = {}
-        part_shas: list[str] = []
-        part_dl = 0
-        cols = [
-            "doc_id", "repo", "path", "commit", "lang", "content_sha256",
-            "shard", "doc_len", "terms", "tfs", "positions",
-        ]
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            it = zip(
-                pdf["shard"], pdf["repo"], pdf["path"], pdf["commit"],
-                pdf["lang"], pdf["content"],
-            )
-            for row in it:
-                shard = int(row[0])
-                rank = next_rank.get(shard, 0) + 1
-                next_rank[shard] = rank
-                if rank >= shard_size_guard:
-                    raise OverflowError(
-                        f"shard {shard} exceeds STRIDE={shard_size_guard} docs; "
-                        "rebuild with more shards"
-                    )
-                doc_id = shard * STRIDE + rank
-                _sh, repo, path, commit, lang, content = row
-                content = content or ""
-                tfp = term_freqs_positions(content)
-                terms = sorted(tfp)
-                sha = hashlib.sha256(content.encode("utf-8")).hexdigest()
-                dl = sum(t[0] for t in tfp.values())
-                tfs = [tfp[t][0] for t in terms]
-                positions = [p for t in terms for p in tfp[t][1]]
-                part_shas.append(sha)
-                part_dl += dl
-                out["doc_id"].append(doc_id)
-                out["repo"].append(repo)
-                out["path"].append(path)
-                out["commit"].append(commit)
-                out["lang"].append(lang)
-                out["content_sha256"].append(sha)
-                out["shard"].append(shard)
-                out["doc_len"].append(dl)
-                out["terms"].append(terms)
-                out["tfs"].append(tfs)
-                out["positions"].append(positions)
-            yield pd.DataFrame(out, columns=cols)
-        rollup = hashlib.sha256(",".join(sorted(part_shas)).encode()).hexdigest()
-        acc.add(
-            {pid: {"partition_id": pid, "doc_count": len(part_shas),
-                   "posting_bytes": part_dl, "sha256_rollup": rollup}}
+    def rule(shard):
+        shard = int(shard)
+        rank = next_rank.get(shard, 0) + 1
+        next_rank[shard] = rank
+        _check_stride(rank, stride)
+        return shard * stride + rank, shard
+
+    return rule
+
+
+def _check_stride(max_rank, stride: int) -> None:
+    if int(max_rank or 0) >= stride:
+        raise OverflowError(
+            f"a shard exceeds STRIDE={stride} docs; nothing was committed — "
+            "rebuild with more shards"
         )
-
-    return run
 
 
 def _shard_grouped(df: DataFrame, n_shards: int) -> DataFrame:
@@ -188,7 +149,6 @@ def _delta_term_stats(
     (unchanged docs — even in touched shards — contribute no df change.)
     Same two-phase salted shape as the full build for hot-term hygiene.
     Writes ``term_stats_next`` (committed) and returns its n_terms."""
-    from pyspark.sql import Observation
 
     def term_counts(df: DataFrame, out: str) -> DataFrame:
         ex = df.select(
@@ -225,17 +185,189 @@ def _delta_term_stats(
     return int(wh.manifest("term_stats_next")["n_terms"])
 
 
-def _write_corpus_next(
-    wh: Warehouse, n_docs: int, sum_dl: int, n_terms: int, new_build_id: str
-) -> None:
-    import pyarrow as pa
+def _shard_parts(root: str) -> list[int]:
+    """Sorted ``shard=`` partition values under a table directory."""
+    if not os.path.isdir(root):
+        return []
+    return sorted(
+        int(d.split("=", 1)[1]) for d in os.listdir(root) if d.startswith("shard=")
+    )
 
-    wh.write_local(
-        [{"n_docs": int(n_docs), "sum_dl": int(sum_dl), "n_terms": int(n_terms)}],
-        {"n_docs": pa.int64(), "sum_dl": pa.int64(), "n_terms": pa.int64()},
-        "corpus_stats_next",
-        stage="corpus_stats",
-        meta={"analyzed_ref": new_build_id},
+
+def commit_delta(
+    spark: SparkSession,
+    wh: Warehouse,
+    rows: DataFrame | None,
+    stage_secs: dict,
+    *,
+    drop_parts=lambda present, existing: [],
+    tombs: DataFrame | str | None = None,
+    stats: tuple[DataFrame, DataFrame] | None = None,
+    n_docs: int | None = None,
+    sum_dl: int | None = None,
+    gen: int | None = None,
+    max_gen: int | None = None,
+) -> BuildInfo:
+    """Commit one delta over a stable-id warehouse: the shared tail of the
+    shard swap (incremental_build_stable), the segment upsert/delete
+    (segments.segment_tail), merge_generations and compact_segments.
+
+    ``rows`` are the delta's analyzed rows (doc_id is ignored) whose
+    ``shard`` column names the partition they replace or add, or None
+    when the delta has none.  Sequence:
+
+      1. rank: doc_id = shard * STRIDE + row_number over (shard | KEYS)
+         — pure JVM, and exactly the ids a from-scratch build assigns
+         (same shard, same key order); kept rows' term arrays never
+         round-trip through Python.  An Observation guards STRIDE;
+      2. write ``analyzed_delta`` and append its lineage;
+      3. ``stats`` = (added, removed) analyzed frames: delta-maintain
+         term_stats df and the corpus scalars into *_next tables
+         (otherwise both are only restamped — they are already exact);
+      4. write the doc_stats/postings/doc_lens deltas from analyzed_delta;
+      5. ``tombs``: a frame is staged as the new tombstones table,
+         "drop" drops the table, None keeps the committed one;
+      6. swap plan: every ``shard=`` partition of each delta moves in;
+         ``drop_parts(present, existing)`` names the table's partitions
+         to delete (existing = its committed partitions);
+      7. final manifests: analyzed gets ``n_docs``/``sum_dl`` (default:
+         unchanged), a new build_id, and ``max_gen`` = ``gen`` if the
+         delta has rows, else ``max_gen`` if given; every downstream
+         table is stamped with the new build_id;
+      8. one _TXN journal (begin_txn) records it all and recover_txn
+         applies it — a kill anywhere leaves the old index or the new.
+
+    Staged tables are all committed before the journal is written, so an
+    OverflowError or any failure before step 8 leaves the committed
+    index untouched."""
+    for t in _STAGING:
+        wh.drop(t)
+    man = wh.manifest("analyzed")
+    n_docs = int(man["n_docs"]) if n_docs is None else n_docs
+    sum_dl = int(man["sum_dl"]) if sum_dl is None else sum_dl
+    build_id = uuid.uuid4().hex
+    run: list[str] = []
+    n_rows = 0
+    if rows is not None:
+        t1 = time.time()
+        obs = Observation("delta_rank_guard")
+        wnd = Window.partitionBy("shard").orderBy(*KEYS)
+        doc_id = F.col("shard").cast("long") * F.lit(STRIDE) + F.col("rank")
+        ranked = (
+            rows.select(*NO_ID)
+            .withColumn("rank", F.row_number().over(wnd))
+            .observe(obs, F.max("rank").alias("max_rank"), F.count(F.lit(1)).alias("n"))
+            .select(doc_id.alias("doc_id"), *NO_ID)
+        )
+        wh.write(
+            ranked,
+            "analyzed_delta",
+            stage="analyzed",
+            partition_by=["shard"],
+            meta={
+                "n_docs": n_docs,
+                "sum_dl": sum_dl,
+                "n_shards": int(man["n_shards"]),
+                "shard_size": STRIDE,
+                "doc_id_mode": "stable",
+                "build_id": build_id,
+            },
+        )
+        _check_stride(obs.get["max_rank"], STRIDE)
+        n_rows = int(obs.get["n"])
+        wh.append_lineage_rows("analyzed", wh.footer_lineage_rows("analyzed_delta"))
+        stage_secs["analyzed"] = round(time.time() - t1, 2)
+        run.append("analyzed")
+
+    promotes: list[list[str]] = []
+    if stats is not None:
+        import pyarrow as pa
+
+        t1 = time.time()
+        n_terms = _delta_term_stats(spark, wh, *stats, build_id)
+        stage_secs["term_stats"] = round(time.time() - t1, 2)
+        wh.write_local(
+            [{"n_docs": n_docs, "sum_dl": sum_dl, "n_terms": n_terms}],
+            {"n_docs": pa.int64(), "sum_dl": pa.int64(), "n_terms": pa.int64()},
+            "corpus_stats_next",
+            stage="corpus_stats",
+            meta={"analyzed_ref": build_id},
+        )
+        promotes += [["term_stats_next", "term_stats"],
+                     ["corpus_stats_next", "corpus_stats"]]
+        run += ["term_stats", "corpus_stats"]
+
+    if rows is not None:
+        delta_df = wh.read(spark, "analyzed_delta")
+        for stage, write in [
+            ("doc_stats", lambda: _stage_doc_stats(
+                spark, delta_df, wh, dst="doc_stats_delta")),
+            ("postings", lambda: _stage_postings(
+                spark, wh, src="analyzed_delta", dst="postings_delta")),
+            ("doc_lens", lambda: _stage_doc_lens(
+                spark, delta_df, wh, STRIDE, dst="doc_lens_delta")),
+        ]:
+            t1 = time.time()
+            write()
+            stage_secs[stage] = round(time.time() - t1, 2)
+            run.append(stage)
+
+    drops: list[str] = []
+    if isinstance(tombs, DataFrame):
+        t1 = time.time()
+        tomb_obs = Observation("tombstones_next")
+        wh.write(
+            tombs.observe(tomb_obs, F.count(F.lit(1)).alias("n")),
+            "tombstones_next",
+            stage="tombstones",
+            sort_by=["shard", "doc_id"],
+            meta={"analyzed_ref": build_id},
+            meta_fn=lambda: {"n_tombs": int(tomb_obs.get["n"])},
+        )
+        promotes.append(["tombstones_next", "tombstones"])
+        stage_secs["tombstones"] = round(time.time() - t1, 2)
+        run.append("tombstones")
+    elif tombs == "drop":
+        drops.append("tombstones")
+
+    now = time.time()
+    swaps = []
+    for table, delta in _DELTA_TABLES:
+        present = _shard_parts(wh.path(delta))
+        swaps.append({
+            "table": table,
+            "delta": delta,
+            "moves": present,
+            "deletes": drop_parts(present, _shard_parts(wh.path(table))),
+        })
+    am = dict(man, n_docs=n_docs, sum_dl=sum_dl, build_id=build_id, committed_at=now)
+    if gen is not None and n_rows:
+        am["max_gen"] = gen
+    elif max_gen is not None:
+        am["max_gen"] = max_gen
+    manifests = {"analyzed": am}
+    restamp = ["doc_stats", "postings", "doc_lens"]
+    if stats is None:
+        restamp += ["term_stats", "corpus_stats"]
+    for t in restamp:
+        manifests[t] = dict(wh.manifest(t), analyzed_ref=build_id, committed_at=now)
+    manifests["postings"]["n_docs"] = n_docs
+    for src, dst in promotes:
+        manifests[dst] = dict(wh.manifest(src), table=dst)
+    wh.begin_txn(
+        {"swaps": swaps, "promotes": promotes, "drops": drops, "manifests": manifests}
+    )
+    wh.recover_txn()
+    stage_secs["swap"] = round(time.time() - now, 2)
+
+    order = ["analyzed", *DOWNSTREAM_STAGES, "tombstones"]
+    return BuildInfo(
+        n_docs,
+        int(man["n_shards"]),
+        STRIDE,
+        stages_run=sorted(run, key=order.index),
+        stages_skipped=[s for s in ["analyzed", *DOWNSTREAM_STAGES] if s not in run],
+        stage_secs=stage_secs,
     )
 
 
@@ -258,7 +390,7 @@ def _stage_analyzed_stable(
         "shard", stable_shard_col(n_shards)
     )
     analyzed = _shard_grouped(src, n_shards).mapInPandas(
-        _analyze_rank_fn(lin_acc), ANALYZED_SCHEMA
+        _analyze_fn(lin_acc, ANALYZED_COLS, _stable_ids), ANALYZED_SCHEMA
     )
     wh.write(
         analyzed,
@@ -422,11 +554,6 @@ def incremental_build_stable(
     t0 = time.time()
     stage_secs: dict[str, float] = {}
 
-    # abandoned staging from a run killed BEFORE its journal was written
-    # is meaningless (no journal -> old warehouse is authoritative)
-    for t in _STAGING:
-        wh.drop(t)
-
     old = wh.read(spark, "analyzed")
     if segmented:
         # the gate must see the LIVE corpus: physical analyzed rows minus
@@ -487,55 +614,10 @@ def incremental_build_stable(
 
     # tokenize ONLY the changed docs (the staleness gate); lineage under
     # incremental_tokenize proves the gate (doc_count == changed docs)
-    sc = spark.sparkContext
-    tok_acc = sc.accumulator({}, _LineageAccParam())
-
-    def analyze_only(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        n = 0
-        dl_sum = 0
-        shas: list[str] = []
-        cols = KEYS + ["lang", "content_sha256", "shard", "doc_len",
-                       "terms", "tfs", "positions"]
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for repo, path, commit, lang, content, shard in zip(
-                pdf["repo"], pdf["path"], pdf["commit"], pdf["lang"],
-                pdf["content"], pdf["shard"],
-            ):
-                content = content or ""
-                tfp = term_freqs_positions(content)
-                terms = sorted(tfp)
-                sha = hashlib.sha256(content.encode("utf-8")).hexdigest()
-                dl = sum(t[0] for t in tfp.values())
-                n += 1
-                dl_sum += dl
-                shas.append(sha)
-                out["repo"].append(repo)
-                out["path"].append(path)
-                out["commit"].append(commit)
-                out["lang"].append(lang)
-                out["content_sha256"].append(sha)
-                out["shard"].append(int(shard))
-                out["doc_len"].append(dl)
-                out["terms"].append(terms)
-                out["tfs"].append([tfp[t][0] for t in terms])
-                out["positions"].append([p for t in terms for p in tfp[t][1]])
-            yield pd.DataFrame(out, columns=cols)
-        rollup = hashlib.sha256(",".join(sorted(shas)).encode()).hexdigest()
-        tok_acc.add(
-            {pid: {"partition_id": pid, "doc_count": n,
-                   "posting_bytes": dl_sum, "sha256_rollup": rollup}}
-        )
-
-    an_schema = (
-        "repo string, path string, commit string, lang string, "
-        "content_sha256 string, shard int, doc_len int, "
-        "terms array<string>, tfs array<int>, positions array<int>"
-    )
+    tok_acc = spark.sparkContext.accumulator({}, _LineageAccParam())
     changed_an = (
         changed.select(*KEYS, "lang", "content", "shard")
-        .mapInPandas(analyze_only, an_schema)
+        .mapInPandas(_analyze_fn(tok_acc, NO_ID), analyzed_schema(NO_ID))
         .persist(StorageLevel.DISK_ONLY)
     )
 
@@ -545,188 +627,71 @@ def incremental_build_stable(
     gn = gone.agg(
         F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("doc_len"), F.lit(0)).alias("dl")
     ).collect()[0]
-    n_changed, dl_changed = int(ch["n"]), int(ch["dl"])
-    n_gone, dl_gone = int(gn["n"]), int(gn["dl"])
+    n_changed, n_gone = int(ch["n"]), int(gn["n"])
     stage_secs["gate"] = round(time.time() - t0, 2)
 
-    if n_changed == 0 and n_gone == 0:
+    try:
+        if n_changed == 0 and n_gone == 0:
+            if all(_downstream_current(wh, t) for t in DOWNSTREAM_STAGES):
+                return BuildInfo(
+                    int(man["n_docs"]), n_shards, STRIDE,
+                    stages_run=[],
+                    stages_skipped=["analyzed"] + DOWNSTREAM_STAGES,
+                    stage_secs={},
+                )
+            # downstream missing/stale: heal via the full-build resume path
+            # (skips the committed analyzed, rebuilds only non-current stages)
+            return build_index(spark, docs, wh, parallel=parallel, doc_id_mode="stable")
+
+        wh.append_lineage_rows("incremental_tokenize", list(tok_acc.value.values()))
+        live = {
+            "n_docs": int(man["n_docs"]) - n_gone + n_changed,
+            "sum_dl": int(man["sum_dl"]) - int(gn["dl"]) + int(ch["dl"]),
+        }
+
+        def _to_segment() -> BuildInfo:
+            from .segments import segment_tail
+
+            return segment_tail(
+                spark, wh, changed_an, gone, n_changed, n_gone, live,
+                stage_secs, auto_compact_ratio, maintenance,
+            )
+
+        if segmented or strategy == "segment":
+            # a segmented warehouse stays segmented (shard-swap would collide
+            # with live segment rows); explicit "segment" skips the touched-
+            # shard census entirely
+            return _to_segment()
+
+        touched = sorted(
+            {int(r["shard"]) for r in changed_an.select("shard").distinct().collect()}
+            | {int(r["shard"]) for r in gone.select("shard").distinct().collect()}
+        )
+        if strategy == "auto" and len(touched) >= SEG_AUTO_FRAC * n_shards:
+            return _to_segment()
+
+        # ---- the touched shards' FULL new membership (reused rows keep
+        # their committed terms verbatim), re-ranked by commit_delta.  The
+        # JVM rank matters most under uniform churn (all shards touched):
+        # measured at 200k docs, the old tokenize=False mapInPandas pass
+        # alone cost 25.4 s (tools/incremental_bench.py).
+        old_t = old.filter(F.col("shard").isin(touched))
+        if mode == "full":
+            kept = old_t.join(incoming.select(*GATE), GATE, "left_semi")
+        else:
+            # anti-join on gone's keys (= replaced ∪ deleted): covers the
+            # deletes batch too; brand-new keys aren't in old_t either way
+            kept = old_t.join(gone.select(*KEYS), KEYS, "left_anti")
+        return commit_delta(
+            spark, wh, kept.select(*NO_ID).unionByName(changed_an.select(*NO_ID)),
+            stage_secs,
+            drop_parts=lambda present, _existing: sorted(set(touched) - set(present)),
+            stats=(changed_an, gone),
+            **live,
+        )
+    finally:
         changed_an.unpersist()
         gone.unpersist()
-        if all(_downstream_current(wh, t) for t in DOWNSTREAM_STAGES):
-            return BuildInfo(
-                int(man["n_docs"]), n_shards, STRIDE,
-                stages_run=[],
-                stages_skipped=["analyzed"] + DOWNSTREAM_STAGES,
-                stage_secs={},
-            )
-        # downstream missing/stale: heal via the full-build resume path
-        # (skips the committed analyzed, rebuilds only non-current stages)
-        return build_index(spark, docs, wh, parallel=parallel, doc_id_mode="stable")
-
-    wh.append_lineage_rows("incremental_tokenize", list(tok_acc.value.values()))
-
-    def _to_segment() -> BuildInfo:
-        from .segments import segment_tail
-
-        return segment_tail(
-            spark, wh, changed_an, gone,
-            n_changed, dl_changed, n_gone, dl_gone,
-            stage_secs, auto_compact_ratio, maintenance,
-        )
-
-    if segmented or strategy == "segment":
-        # a segmented warehouse stays segmented (shard-swap would collide
-        # with live segment rows); explicit "segment" skips the touched-
-        # shard census entirely
-        return _to_segment()
-
-    touched = sorted(
-        {int(r["shard"]) for r in changed_an.select("shard").distinct().collect()}
-        | {int(r["shard"]) for r in gone.select("shard").distinct().collect()}
-    )
-    if strategy == "auto" and len(touched) >= SEG_AUTO_FRAC * n_shards:
-        return _to_segment()
-    n_docs_new = int(man["n_docs"]) - n_gone + n_changed
-    sum_dl_new = int(man["sum_dl"]) - dl_gone + dl_changed
-    new_build_id = uuid.uuid4().hex
-
-    # ---- analyzed_delta: the touched shards' FULL new membership,
-    # re-ranked locally (reused rows keep their committed terms verbatim).
-    # Rank assignment is PURE JVM — row_number over (shard | KEYS order)
-    # produces exactly the ids the from-scratch Python counter would
-    # (same partition key, same sort key, unique keys), but the kept
-    # rows' term/position arrays never round-trip through Python.  That
-    # matters most under uniform churn (all shards touched): measured at
-    # 200k docs, the old tokenize=False mapInPandas pass alone cost
-    # 25.4 s; the window form leaves tokenization as the only Python in
-    # the analyzed stage (tools/incremental_bench.py).
-    t1 = time.time()
-    old_t = old.filter(F.col("shard").isin([int(s) for s in touched]))
-    if mode == "full":
-        kept = old_t.join(incoming.select(*GATE), GATE, "left_semi")
-    else:
-        # anti-join on gone's keys (= replaced ∪ deleted): covers the
-        # deletes batch too; brand-new keys aren't in old_t either way
-        kept = old_t.join(gone.select(*KEYS), KEYS, "left_anti")
-    no_id = ["repo", "path", "commit", "lang", "content_sha256", "shard",
-             "doc_len", "terms", "tfs", "positions"]
-    delta_rows = kept.select(*no_id).unionByName(changed_an.select(*no_id))
-    from pyspark.sql import Observation
-    from pyspark.sql.window import Window
-
-    wnd = Window.partitionBy("shard").orderBy(*KEYS)
-    rank_obs = Observation("delta_rank_guard")
-    delta_analyzed = (
-        delta_rows.withColumn("rank", F.row_number().over(wnd))
-        .observe(rank_obs, F.max("rank").alias("max_rank"))
-        .select(
-            (F.col("shard").cast("long") * F.lit(STRIDE) + F.col("rank")).alias(
-                "doc_id"
-            ),
-            *no_id,
-        )
-    )
-    wh.write(
-        delta_analyzed,
-        "analyzed_delta",
-        stage="analyzed",
-        partition_by=["shard"],
-        meta={
-            "n_docs": n_docs_new,
-            "sum_dl": sum_dl_new,
-            "n_shards": n_shards,
-            "shard_size": STRIDE,
-            "doc_id_mode": "stable",
-            "build_id": new_build_id,
-            "touched_shards": [int(s) for s in touched],
-        },
-    )
-    if int(rank_obs.get["max_rank"] or 0) >= STRIDE:
-        # staged delta only — nothing journaled, committed tables intact
-        raise OverflowError(
-            f"a shard exceeds STRIDE={STRIDE} docs; rebuild with more shards"
-        )
-    wh.append_lineage_rows("analyzed", wh.footer_lineage_rows("analyzed_delta"))
-    stage_secs["analyzed"] = round(time.time() - t1, 2)
-
-    t1 = time.time()
-    n_terms = _delta_term_stats(spark, wh, changed_an, gone, new_build_id)
-    stage_secs["term_stats"] = round(time.time() - t1, 2)
-    _write_corpus_next(wh, n_docs_new, sum_dl_new, n_terms, new_build_id)
-
-    # ---- downstream deltas over the touched shards only
-    delta_df = wh.read(spark, "analyzed_delta")
-    t1 = time.time()
-    _stage_doc_stats(spark, delta_df, wh, dst="doc_stats_delta")
-    stage_secs["doc_stats"] = round(time.time() - t1, 2)
-    t1 = time.time()
-    _stage_postings(spark, wh, src="analyzed_delta", dst="postings_delta")
-    stage_secs["postings"] = round(time.time() - t1, 2)
-    t1 = time.time()
-    _stage_doc_lens(spark, delta_df, wh, STRIDE, dst="doc_lens_delta")
-    stage_secs["doc_lens"] = round(time.time() - t1, 2)
-    changed_an.unpersist()
-    gone.unpersist()
-
-    # ---- single-journal swap
-    now = time.time()
-    swaps = []
-    for table, delta in _DELTA_TABLES:
-        droot = wh.path(delta)
-        present = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(droot)
-            if d.startswith("shard=")
-        )
-        swaps.append(
-            {
-                "table": table,
-                "delta": delta,
-                "moves": present,
-                "deletes": sorted(set(touched) - set(present)),
-            }
-        )
-    manifests: dict[str, dict] = {}
-    am = dict(man)
-    am.update(
-        {
-            "n_docs": n_docs_new,
-            "sum_dl": sum_dl_new,
-            "build_id": new_build_id,
-            "committed_at": now,
-        }
-    )
-    manifests["analyzed"] = am
-    for t in ["doc_stats", "postings", "doc_lens"]:
-        m = dict(wh.manifest(t))
-        m.update({"analyzed_ref": new_build_id, "committed_at": now})
-        if t == "postings":
-            m["n_docs"] = n_docs_new
-        manifests[t] = m
-    for src, dst in [("term_stats_next", "term_stats"),
-                     ("corpus_stats_next", "corpus_stats")]:
-        m = dict(wh.manifest(src))
-        m["table"] = dst
-        manifests[dst] = m
-    wh.begin_txn(
-        {
-            "swaps": swaps,
-            "promotes": [["term_stats_next", "term_stats"],
-                         ["corpus_stats_next", "corpus_stats"]],
-            "manifests": manifests,
-        }
-    )
-    wh.recover_txn()
-    stage_secs["swap"] = round(time.time() - now, 2)
-
-    return BuildInfo(
-        n_docs_new,
-        n_shards,
-        STRIDE,
-        stages_run=["analyzed"] + DOWNSTREAM_STAGES,
-        stages_skipped=[],
-        stage_secs=stage_secs,
-    )
 
 
 @locked("delete_docs", "wh")
