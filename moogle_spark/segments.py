@@ -164,8 +164,9 @@ def segment_tail(
     has already run (changed_an = tokenized changed docs with their BASE
     shard column; gone = the live analyzed rows being replaced/removed,
     carrying their physical shard + doc_id; live = the new n_docs and
-    sum_dl).  Commits generation max_gen+1 plus the tombstones, then
-    runs the ``auto_compact_ratio`` maintenance."""
+    sum_dl).  Commits generation max_gen+1 (only when there are changed
+    docs — a pure delete adds tombstones and no generation) plus the
+    tombstones, then runs the ``auto_compact_ratio`` maintenance."""
     man = wh.manifest("analyzed")
     n_shards = int(man["n_shards"])
     new_gen = int(man.get("max_gen", 0)) + 1
@@ -182,8 +183,8 @@ def segment_tail(
         dead = wh.read(spark, "tombstones").unionByName(dead)
         n_tombs += int(wh.manifest("tombstones")["n_tombs"])
     info = commit_delta(
-        spark, wh, seg, stage_secs,
-        tombs=dead, stats=(changed_an, gone), max_gen=new_gen, **live,
+        spark, wh, seg if n_changed else None, stage_secs,
+        tombs=dead, stats=(changed_an, gone), gen=new_gen, **live,
     )
     if (
         auto_compact_ratio is not None

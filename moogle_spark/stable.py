@@ -224,7 +224,8 @@ def commit_delta(
       3. ``stats`` = (added, removed) analyzed frames: delta-maintain
          term_stats df and the corpus scalars into *_next tables
          (otherwise both are only restamped — they are already exact);
-      4. write the doc_stats/postings/doc_lens deltas from analyzed_delta;
+      4. write the doc_stats/postings/doc_lens deltas from analyzed_delta
+         (skipped, with the generation bump, when the delta has no rows);
       5. ``tombs``: a frame is staged as the new tombstones table,
          "drop" drops the table, None keeps the committed one;
       6. swap plan: every ``shard=`` partition of each delta moves in;
@@ -297,7 +298,7 @@ def commit_delta(
                      ["corpus_stats_next", "corpus_stats"]]
         run += ["term_stats", "corpus_stats"]
 
-    if rows is not None:
+    if n_rows:
         delta_df = wh.read(spark, "analyzed_delta")
         for stage, write in [
             ("doc_stats", lambda: _stage_doc_stats(

@@ -122,6 +122,32 @@ def test_delete_docs_segment_tombstones_only(
     _engines_agree(spark, wh, scratch_reduced)
 
 
+def test_pure_delete_adds_no_generation(
+    spark, tmp_path, base_v1, scratch_reduced, monkeypatch
+):
+    """A delete batch has no delta rows: it stages tombstones and the
+    live stats only — no empty generation, no downstream delta stage —
+    and queries still agree with the reduced-corpus scratch build."""
+    from moogle_spark import stable
+    from moogle_spark.tables import Warehouse
+
+    wh = _clone(base_v1, tmp_path, "puredel")
+    calls = []
+    orig = stable._stage_postings
+
+    def spy(*args, **kwargs):
+        calls.append(kwargs.get("dst"))
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(stable, "_stage_postings", spy)
+    stable.delete_docs(spark, _del_keys(spark), wh, strategy="segment")
+    assert calls == []
+    man = Warehouse(wh).manifest("analyzed")
+    assert int(man.get("max_gen", 0)) == 0
+    assert int(man["n_docs"]) == 380
+    _engines_agree(spark, wh, scratch_reduced)
+
+
 def test_upsert_batch_with_deletes_semantics(spark, tmp_path, base_v1):
     """One batch: 5 changed docs, 1 of which is ALSO listed in deletes
     (doc wins), 10 other keys deleted, 5 absent keys deleted (no-op)."""

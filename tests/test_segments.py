@@ -638,12 +638,13 @@ CHARACTERIZATION = [
         },
         restamped=RESTAMPED,
     ),
-    # delete_docs of five keys (two of them generation-resident)
+    # delete_docs of five keys (two of them generation-resident): no
+    # delta rows, so no new generation
     _plan(
         moves=[], deletes=[],
         promotes=STATS_NEXT + ["tombstones_next"], drops=[],
         manifests={
-            "analyzed": {"max_gen": 2, "n_docs": 395},
+            "analyzed": {"max_gen": 1, "n_docs": 395},
             "postings": {"n_docs": 395},
             "tombstones": {"n_tombs": 11},
         },
