@@ -709,3 +709,32 @@ def test_write_paths_journal_characterization(spark, tmp_path, base_v1, monkeypa
     compact_segments(spark, wh_a, max_shards=2)
     incremental_build(spark, ups, wh_b, mode="upsert", strategy="shards")
     assert plans == CHARACTERIZATION
+
+
+def test_stride_guard_aborts_before_journal(spark, tmp_path, base_v1, monkeypatch):
+    """commit_delta's STRIDE guard: a delta shard whose rank reaches
+    STRIDE raises before the journal is written, so the committed index
+    is untouched; a rerun at the real STRIDE commits."""
+    from moogle_spark import stable
+    from moogle_spark.build import incremental_build
+    from moogle_spark.tables import MANIFEST, Warehouse
+
+    wh = _clone(base_v1, tmp_path, "stride")
+    ups = _docs_v1(spark).orderBy("path").limit(6).withColumn(
+        "content", F.concat(F.col("content"), F.lit(" stridetok"))
+    )
+    man_path = os.path.join(wh, "analyzed", MANIFEST)
+    with open(man_path) as f:
+        before = f.read()
+
+    monkeypatch.setattr(stable, "STRIDE", 1)
+    with pytest.raises(OverflowError, match="STRIDE=1"):
+        incremental_build(spark, ups, wh, mode="upsert", strategy="segment")
+    assert not os.path.exists(os.path.join(wh, "_TXN.json"))
+    with open(man_path) as f:
+        assert f.read() == before
+
+    monkeypatch.undo()
+    info = incremental_build(spark, ups, wh, mode="upsert", strategy="segment")
+    assert "analyzed" in info.stages_run
+    assert int(Warehouse(wh).manifest("analyzed")["max_gen"]) == 1
