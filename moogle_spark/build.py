@@ -62,8 +62,8 @@ import math
 import os
 import uuid
 from collections.abc import Iterator
-from itertools import count, repeat
 from dataclasses import dataclass
+from itertools import count, repeat
 
 import numpy as np
 import pandas as pd
@@ -168,6 +168,7 @@ def _analyze_fn(acc, cols: list[str], ids=None):
         )
 
     return run
+
 
 # dls = varint doc lengths inline per block (impact-index style norms):
 # query-time scoring needs (tf, dl) per posting, so keeping dl beside tf

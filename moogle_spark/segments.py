@@ -170,9 +170,11 @@ def segment_tail(
     man = wh.manifest("analyzed")
     n_shards = int(man["n_shards"])
     new_gen = int(man.get("max_gen", 0)) + 1
-    seg = changed_an.withColumn(
-        "shard", (F.lit(new_gen * n_shards) + F.col("shard")).cast("int")
-    )
+    seg = None
+    if n_changed:
+        seg = changed_an.withColumn(
+            "shard", (F.lit(new_gen * n_shards) + F.col("shard")).cast("int")
+        )
     # tombstones = committed tombstones ∪ the replaced/removed docs' ids.
     # `gone` rows come from the LIVE view, so an id is never tombstoned
     # twice; their shard column is the dead row's PHYSICAL shard (a doc
@@ -183,7 +185,7 @@ def segment_tail(
         dead = wh.read(spark, "tombstones").unionByName(dead)
         n_tombs += int(wh.manifest("tombstones")["n_tombs"])
     info = commit_delta(
-        spark, wh, seg if n_changed else None, stage_secs,
+        spark, wh, seg, stage_secs,
         tombs=dead, stats=(changed_an, gone), gen=new_gen, **live,
     )
     if (

@@ -104,34 +104,16 @@ def test_delete_docs_shard_swap_matches_scratch(
 
 
 def test_delete_docs_segment_tombstones_only(
-    spark, tmp_path, base_v1, scratch_reduced
-):
-    from moogle_spark.stable import delete_docs
-    from moogle_spark.tables import Warehouse
-
-    wh = _clone(base_v1, tmp_path, "seg")
-    before = _snapshot_files(os.path.join(wh, "postings"))
-    delete_docs(spark, _del_keys(spark), wh, strategy="segment")
-    after = _snapshot_files(os.path.join(wh, "postings"))
-    # pure deletion: every base postings DATA file byte-untouched (the
-    # table manifest legitimately re-commits with the new n_docs)
-    data = {k: v for k, v in before.items() if "_MANIFEST" not in k}
-    assert {k: v for k, v in after.items() if k in data} == data
-    tombs = Warehouse(wh).read(spark, "tombstones")
-    assert tombs.count() == 20
-    _engines_agree(spark, wh, scratch_reduced)
-
-
-def test_pure_delete_adds_no_generation(
     spark, tmp_path, base_v1, scratch_reduced, monkeypatch
 ):
-    """A delete batch has no delta rows: it stages tombstones and the
-    live stats only — no empty generation, no downstream delta stage —
-    and queries still agree with the reduced-corpus scratch build."""
+    """A pure delete has no delta rows: it stages tombstones and the live
+    stats only — no base partition touched, no downstream delta stage, no
+    empty generation — and queries agree with the reduced-corpus scratch
+    build."""
     from moogle_spark import stable
     from moogle_spark.tables import Warehouse
 
-    wh = _clone(base_v1, tmp_path, "puredel")
+    wh = _clone(base_v1, tmp_path, "seg")
     calls = []
     orig = stable._stage_postings
 
@@ -140,11 +122,19 @@ def test_pure_delete_adds_no_generation(
         return orig(*args, **kwargs)
 
     monkeypatch.setattr(stable, "_stage_postings", spy)
+    before = _snapshot_files(os.path.join(wh, "postings"))
     stable.delete_docs(spark, _del_keys(spark), wh, strategy="segment")
+    after = _snapshot_files(os.path.join(wh, "postings"))
+    # pure deletion: every base postings DATA file byte-untouched (the
+    # table manifest legitimately re-commits with the new n_docs)
+    data = {k: v for k, v in before.items() if "_MANIFEST" not in k}
+    assert {k: v for k, v in after.items() if k in data} == data
     assert calls == []
     man = Warehouse(wh).manifest("analyzed")
     assert int(man.get("max_gen", 0)) == 0
     assert int(man["n_docs"]) == 380
+    tombs = Warehouse(wh).read(spark, "tombstones")
+    assert tombs.count() == 20
     _engines_agree(spark, wh, scratch_reduced)
 
 
