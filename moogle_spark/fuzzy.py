@@ -65,13 +65,16 @@ def suggest_terms(
 
 def rewrite_query(dictionary: DataFrame, query_terms: list[str]) -> list[str]:
     """FuzzySearch.php:43-47 — replace each word with its best in-cap
-    suggestion (or itself).  Driver-side: |query| rows."""
-    best = (
-        suggest_terms(dictionary, query_terms, per_word=1)
-        .select("word", "suggestion")
-        .collect()
-    )
-    m = {r["word"]: r["suggestion"] for r in best}
+    suggestion (or itself).  Driver-side: |query| rows.  Exact dictionary
+    hits (:77-79) are found with one ``isin`` filter first; only the
+    misses pay the levenshtein join, and a query with none runs no join."""
+    words = sorted({t.lower() for t in query_terms})
+    hits = dictionary.filter(F.col("term").isin(words)).select("term").collect()
+    m = {r["term"]: r["term"] for r in hits}
+    misses = [w for w in words if w not in m]
+    if misses:
+        best = suggest_terms(dictionary, misses, per_word=1).collect()
+        m.update({r["word"]: r["suggestion"] for r in best})
     return [m.get(t.lower(), t.lower()) for t in query_terms]
 
 

@@ -5,19 +5,26 @@ Query lifecycle (SURVEY.md §3.1 rebuild):
   -> optional fuzzy rewrite (fuzzy.py) -> term df/idf lookup (term_stats,
   pruned to the query's terms) -> postings scan filtered by term (parquet
   row-group skipping: postings are written sorted by term within each shard
-  partition) -> per-shard scoring -> global top-k merge
-  (TakeOrderedAndProject) -> metadata join.
+  partition) -> per-shard scoring -> per-query top-k merge -> metadata join.
 
 Posting blocks are SELF-CONTAINED for scoring: doc lengths are stored
 inline per block (impact-index style norms, build.py POSTINGS_SCHEMA), so
-a query plan is just filter -> groupBy(shard) -> applyInPandas -> top-k.
-The postings DataFrame is pre-partitioned by shard and cached at engine
-init, so the per-query groupBy reuses that partitioning — NO per-query
-shuffle of postings, only the k-rows-per-shard result merge.  (The
-previous design cogrouped postings with a doc_lens table; two shuffles
-per query dominated latency.)
+a query plan is just filter -> per-shard scorer (mapInPandas over the
+cached shard partitions, or groupBy(shard).applyInPandas cold) -> a
+row_number window partitioned by query_id -> optional broadcast metadata
+join.  The postings DataFrame is pre-partitioned by shard and cached at
+engine init, so scoring reuses that partitioning — NO per-query shuffle
+of postings, only the k-rows-per-shard result merge.  (The previous
+design cogrouped postings with a doc_lens table; two shuffles per query
+dominated latency.)
 
-Two scorers, both vectorized numpy inside applyInPandas:
+One path serves every query form: search() is search_many([query]) and
+search_phrase() runs the phrase scorer through the same tail
+(SearchEngine._top_k).  A one-query batch merges with a TakeOrdered
+limit first, whose single-partition output already satisfies the
+window's distribution: no exchange, and no job beyond the batch form's.
+
+Two scorers, both vectorized numpy inside the per-shard pass:
   * exhaustive — decode every candidate block, dense-accumulate scores in
     ascending term order (the frozen float order; bit-identical to the
     oracle).
@@ -36,6 +43,8 @@ only cross-executor traffic is the k-row-per-shard merge.
 
 from __future__ import annotations
 
+import threading
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -48,7 +57,13 @@ from .scoring import bm25_idf, bm25_tfpart
 from .segments import TOMB
 from .tables import FORMAT_VERSION, Warehouse
 
-RESULT_SCHEMA = "shard int, doc_id long, score double, match_count int"
+# per-shard scorer output; query_id = position in the search_many batch
+RESULT_SCHEMA = "query_id int, shard int, doc_id long, score double, match_count int"
+# ranked output, and the metadata columns enrich adds
+RANKED_SCHEMA = "query_id int, rank int, doc_id long, score double, match_count int"
+META_SCHEMA = "repo string, path string, commit string, lang string, doc_len int"
+RANKED_COLS = [c.split()[0] for c in RANKED_SCHEMA.split(", ")]
+META_COLS = [c.split()[0] for c in META_SCHEMA.split(", ")]
 
 # search_many decode-memo capacity, in blocks (~128 postings each): hot
 # blocks shared across queries stay memoized; once full, cold blocks
@@ -56,14 +71,39 @@ RESULT_SCHEMA = "shard int, doc_id long, score double, match_count int"
 # a 10k-query batch over diverse terms cannot balloon the Arrow worker
 # toward the decoded size of every touched block at once.
 DECODE_MEMO_CAP = 4096
-MULTI_RESULT_SCHEMA = (
-    "query_id int, shard int, doc_id long, score double, match_count int"
-)
 
 # oldest postings layout this engine can score (v4 replaced the stored
 # block_max_tf float with avgdl-independent (max_tf, min_dl) ints the
 # bmw scorer reads)
 MIN_POSTINGS_VERSION = 4
+
+# Spark's CacheManager keys cached plans canonically: engines on the same
+# commit (or a refresh whose table kept its files) share ONE cache entry,
+# and a plain unpersist() by one holder drops it for all.  So the engines
+# count their holders per cached plan: [DataFrame, semanticHash, holders].
+_PINS: list[list] = []
+_PINS_LOCK = threading.Lock()
+
+
+def _holders(df: DataFrame, delta: int) -> int:
+    """Add ``delta`` holders to ``df``'s cached plan; return how many
+    remain (<= 0: the caller unpersists)."""
+    with _PINS_LOCK:
+        h = df.semanticHash()
+        e = next((e for e in _PINS if e[1] == h and e[0].sameSemantics(df)), None)
+        if e is None:
+            e = [df, h, 0]
+            _PINS.append(e)
+        e[2] += delta
+        if e[2] <= 0:
+            _PINS.remove(e)
+        return e[2]
+
+
+def _release(frames: list[DataFrame]) -> None:
+    for df in frames:
+        if _holders(df, -1) <= 0:
+            df.unpersist()
 
 
 class SearchEngine:
@@ -98,11 +138,11 @@ class SearchEngine:
         self.n_docs = int(cs["n_docs"])
         self.sum_dl = int(cs["sum_dl"])
         self.avgdl = float(self.sum_dl) / float(self.n_docs) if self.n_docs else 1.0
-        # SNAPSHOT reads (explicit file lists): every engine generation's
-        # plans are canonically distinct, so a re-opened engine can never
-        # alias the previous engine's cache entry or have read()'s
-        # refreshByPath re-cache its pinned plans over swapped files —
-        # see Warehouse.read_snapshot
+        # SNAPSHOT reads (explicit file lists): a table whose files a
+        # commit swapped gets a canonically distinct plan, so a re-opened
+        # engine never serves the previous engine's stale entry, nor can
+        # read()'s refreshByPath re-cache its pinned plans over swapped
+        # files — see Warehouse.read_snapshot (unchanged files: _holders)
         self.postings = self.wh.read_snapshot(spark, "postings")
         self.term_stats = self.wh.read_snapshot(spark, "term_stats")
         self.doc_stats = self.wh.read_snapshot(spark, "doc_stats")
@@ -126,6 +166,7 @@ class SearchEngine:
             )
             self._has_tomb = True
         self._sharded = False
+        self._pinned: list[DataFrame] = []
         if cache:
             # pre-partition by shard once and cache; queries then score via
             # mapInPandas over the cached partitions — shard co-location is
@@ -153,7 +194,7 @@ class SearchEngine:
             # before the first query materializes the cache —
             # FAILED_READ_FILE mid-serve (caught by
             # tests/test_concurrent_reader_writer.py).  doc_stats backs
-            # enrich() and is pinned with the rest.
+            # the metadata join and is pinned with the rest.
             self._pin_caches()
         # per-engine spell-suggestion memo (reference: 1 h APC cache,
         # FuzzySearch.php:62-74,133) — created lazily on first fuzzy query
@@ -167,34 +208,28 @@ class SearchEngine:
         before __init__ returns, so no query ever lazily re-reads files
         a concurrent partition swap may have deleted.  Snapshot reads
         (Warehouse.read_snapshot, explicit file lists) make each engine
-        generation's plans canonically distinct, so these entries never
-        alias another engine's.  A pin that fails mid-way (writer
-        swapped files mid-open) unpersists whatever it already pinned —
-        a failed open must not leak index-sized cache entries."""
-        pinned = []
+        generation's plans canonically distinct; engines on the SAME
+        generation share one entry, counted by _holders.  A pin that
+        fails mid-way (writer swapped files mid-open) releases whatever
+        it already pinned — a failed open must not leak index-sized cache
+        entries."""
         try:
             for df in (self.postings, self.term_stats, self.doc_stats):
+                _holders(df, 1)
+                self._pinned.append(df)
                 df.persist()
-                pinned.append(df)
                 df.count()
         except Exception:
-            for df in pinned:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
+            self.unpersist()
             raise
 
     def unpersist(self) -> None:
         """Release this engine's pinned snapshot caches (postings,
         term_stats, doc_stats).  Call when retiring an engine without
-        refresh()-ing it — e.g. test teardown or app shutdown."""
-        if self._sharded:
-            for df in (self.postings, self.term_stats, self.doc_stats):
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
+        refresh()-ing it — e.g. test teardown or app shutdown.  A cache
+        another open engine still holds stays pinned."""
+        pinned, self._pinned = self._pinned, []
+        _release(pinned)
 
     def _commit_sig(self) -> tuple:
         """Identity of the index this engine serves: every mutating op
@@ -246,9 +281,9 @@ class SearchEngine:
             # and the eager cache materialization, deleting the files
             # mid-open.  One full retry lands on the newer commit; a
             # second failure propagates — and leaves THIS engine fully
-            # intact and still pinned (the failed open cleaned up its own
-            # partial pins; snapshot reads mean it cannot have touched
-            # our entries), exactly as the docstring promises.
+            # intact and still pinned (the failed open released its own
+            # partial pins, and a pin it shared with us keeps our holder
+            # count), exactly as the docstring promises.
             try:
                 fresh = SearchEngine(self.spark, self.wh, cache=self._cache_flag)
                 break
@@ -257,15 +292,9 @@ class SearchEngine:
                 self.wh.recover_orphaned_txn()
         if fresh is None:
             raise last_err
-        old = (
-            (self.postings, self.term_stats, self.doc_stats)
-            if self._sharded
-            else None
-        )
+        old = self._pinned
         self.__dict__.update(fresh.__dict__)
-        if old is not None:
-            for df in old:
-                df.unpersist()
+        _release(old)
         return True
 
     # ------------------------------------------------------------------
@@ -299,10 +328,13 @@ class SearchEngine:
     ) -> DataFrame:
         """Top-k BM25. Returns (rank, doc_id, score, match_count [+meta]).
 
+        The one-query batch of search_many: same scorer, merge and
+        enrich, with query_id dropped.
+
         ``page`` is the reference's $skip offset pagination
         (QuerySearchController.php:280-281): page p returns global ranks
-        (p-1)*k+1 .. p*k.  Implemented as top page*k + a rank-window
-        slice, so the per-shard scorers still only ship k' = page*k rows.
+        (p-1)*k+1 .. p*k.  Implemented as top page*k + a rank slice, so
+        the per-shard scorers still only ship k' = page*k rows.
 
         ``fuzzy=True`` mirrors the reference's FuzzySearch middleware
         running on every /api/search (routes/api.php:12): each query word
@@ -312,44 +344,10 @@ class SearchEngine:
         term), already cached at init."""
         if page < 1:
             raise ValueError(f"page={page} — pagination is 1-based")
-        terms = sorted(set(tokenize_query(query)))
-        if fuzzy and terms:
-            terms = sorted(set(self._fuzzy_rewrite(terms)))
-        if not terms:
-            return self._empty(enrich)
-        # df rides into the scorer via a broadcast join with the (tiny)
-        # filtered term_stats — no per-query driver collect, so a search
-        # is ONE Spark job before the k-row merge.  Terms absent from the
-        # index simply contribute no rows; idf is recomputed per shard
-        # from the exact integer df, bit-identical to the oracle.
-        cand = self._candidates(terms)
-        keff = page * k
-        fn = _make_scorer(self.n_docs, self.avgdl, keff, mode)
-        if self._sharded:
-            # partitions physically hold whole shards (see __init__) —
-            # score per partition, grouping by shard inside; zero exchange
-            scored = cand.mapInPandas(_partition_scorer(fn), RESULT_SCHEMA)
-        else:
-            scored = cand.groupBy("shard").applyInPandas(fn, RESULT_SCHEMA)
-        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(keff)
-        # unpartitioned window over a frame that is <= page*k rows BY
-        # CONSTRUCTION (the limit above): Spark's "No Partition Defined
-        # for Window" warning fires here but is harmless — the single
-        # partition holds k-ish rows, never corpus data
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        out = top.withColumn("rank", F.row_number().over(w)).select(
-            "rank", "doc_id", "score", "match_count"
-        )
+        out = self.search_many([query], k=page * k, mode=mode, fuzzy=fuzzy, enrich=enrich)
         if page > 1:
             out = out.filter(F.col("rank") > (page - 1) * k)
-        return self.enrich(out) if enrich else out
-
-    def _fuzzy_rewrite(self, terms: list[str]) -> list[str]:
-        if self._fuzzy_cache is None:
-            from .fuzzy import SuggestionCache
-
-            self._fuzzy_cache = SuggestionCache()
-        return self._fuzzy_cache.rewrite(self.term_stats, terms)
+        return out.drop("query_id")
 
     def search_many(
         self,
@@ -360,12 +358,13 @@ class SearchEngine:
         enrich: bool = False,
     ) -> DataFrame:
         """Batched top-k: score ALL queries in ONE zero-exchange postings
-        pass.  Returns (query_id, rank, doc_id, score, match_count) with
-        query_id = position in ``queries``; per-query rows are identical
-        to ``search(queries[i], k, mode)`` (asserted in
-        tests/test_engine_parity.py).  ``enrich=True`` joins doc
-        metadata onto the whole batch with ONE broadcast join (the same
-        J2 semantics as enrich(), k·|queries| rows broadcast).
+        pass.  Returns (query_id, rank, doc_id, score, match_count
+        [+meta]) with query_id = position in ``queries``; per-query rows
+        equal the oracle's top-k (asserted in tests/test_engine_parity.py).
+        ``enrich=True`` joins doc metadata onto the whole batch with ONE
+        broadcast join (QuerySearchController.php:307-336 semantics,
+        k·|queries| rows broadcast).  ``fuzzy=True`` rewrites the union of
+        the batch's words in one suggestion lookup.
 
         Why a batch form exists: a single search is already one Spark job,
         so an N-query replay pays N× the per-job scheduling floor
@@ -383,59 +382,20 @@ class SearchEngine:
         pass: the scorers share a per-pass (term, block_id) decode memo,
         so a 10k-query replay whose queries share hot terms pays decode
         per distinct block, not per (query, block).  Decoded arrays are
-        never mutated by scorers (fancy indexing copies), so results
-        stay byte-identical to search() — asserted in
-        tests/test_engine_parity.py."""
-        qterms: list[list[str]] = []
-        for q in queries:
-            terms = sorted(set(tokenize_query(q)))
-            if fuzzy and terms:
-                terms = sorted(set(self._fuzzy_rewrite(terms)))
-            qterms.append(terms)
+        never mutated by scorers (fancy indexing copies), so results are
+        byte-identical to scoring each query alone."""
+        qterms = [sorted(set(tokenize_query(q))) for q in queries]
+        if fuzzy:
+            if self._fuzzy_cache is None:
+                from .fuzzy import SuggestionCache
+
+                self._fuzzy_cache = SuggestionCache()
+            words = sorted({t for ts in qterms for t in ts})
+            fixed = dict(zip(words, self._fuzzy_cache.rewrite(self.term_stats, words)))
+            qterms = [sorted({fixed[t] for t in ts}) for ts in qterms]
         all_terms = sorted({t for ts in qterms for t in ts})
-        empty_schema = (
-            "query_id int, rank int, doc_id long, score double, match_count int"
-        )
-        if enrich:
-            empty_schema += (
-                ", repo string, path string, commit string, lang string, doc_len int"
-            )
-        if not all_terms:
-            # schema parity with the non-empty path (and with
-            # search(q, enrich=True)'s _empty): a replay whose queries
-            # all tokenize to nothing must still write the full shape
-            return self.spark.createDataFrame([], empty_schema)
-        cand = self._candidates(all_terms)
         fn = _make_multi_scorer(qterms, self.n_docs, self.avgdl, k, mode)
-        if self._sharded:
-            scored = cand.mapInPandas(_partition_scorer(fn), MULTI_RESULT_SCHEMA)
-        else:
-            scored = cand.groupBy("shard").applyInPandas(fn, MULTI_RESULT_SCHEMA)
-        # merge: <= k rows per (query, shard); partitioned window, so the
-        # shuffle moves k·|queries|·shards rows and no WindowExec
-        # single-partition fallback is involved
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-        out = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score", "match_count")
-        )
-        if not enrich:
-            return out
-        # batch enrichment: ONE broadcast of the whole k·|queries| result
-        # against the cached doc_stats — same J2 join as enrich(), not a
-        # per-query join fan-out
-        meta = self.doc_stats.select(
-            "doc_id", "repo", "path", "commit", "lang", "doc_len"
-        )
-        return (
-            meta.join(F.broadcast(out), "doc_id", "inner")
-            .orderBy("query_id", "rank")
-            .select(
-                "query_id", "rank", "doc_id", "score", "match_count",
-                "repo", "path", "commit", "lang", "doc_len",
-            )
-        )
+        return self._top_k(all_terms, fn, k, len(queries), enrich)
 
     def search_with_images(
         self,
@@ -474,51 +434,66 @@ class SearchEngine:
         matches iff the phrase's doc-mode tokens occur at consecutive
         positions in its post-filter token stream.  match_count = number
         of occurrences; score = BM25 over the phrase's distinct terms.
-        Same zero-exchange per-shard plan as search(); verified
+        Same zero-exchange per-shard plan and tail as search(); verified
         rank/score-identical against oracle_phrase_search in tests."""
         from .analyzer import tokenize_doc
 
         terms = tokenize_doc(query)
-        if not terms:
-            return self._empty(enrich)
         uniq = sorted(set(terms))
         dfs = self.term_dfs(uniq)
-        if any(dfs.get(t, 0) == 0 for t in uniq):
-            return self._empty(enrich)
-        idf = {t: float(bm25_idf(self.n_docs, dfs[t])) for t in uniq}
-        cand = self._candidates(uniq, with_df=False)
+        # a phrase term absent from the index: nothing can match
+        present = uniq if all(dfs.get(t, 0) for t in uniq) else []
+        idf = {t: float(bm25_idf(self.n_docs, dfs[t])) for t in present}
         fn = _make_phrase_scorer(terms, idf, self.avgdl, k)
+        return self._top_k(present, fn, k, 1, enrich, with_df=False).drop("query_id")
+
+    def _top_k(
+        self, terms: list[str], fn, k: int, n_queries: int, enrich: bool,
+        with_df: bool = True,
+    ) -> DataFrame:
+        """The tail every query form shares: score the postings of
+        ``terms`` per shard with ``fn`` (RESULT_SCHEMA rows), keep each
+        query's top ``k`` ranked by (score desc, doc_id asc), and with
+        ``enrich`` join the metadata, ordered by (query_id, rank)."""
+        if not terms:
+            # same shape as the non-empty path: a replay whose queries all
+            # tokenize to nothing must still write the full schema
+            return self.spark.createDataFrame(
+                [], RANKED_SCHEMA + (", " + META_SCHEMA if enrich else "")
+            )
+        cand = self._candidates(terms, with_df)
         if self._sharded:
+            # partitions physically hold whole shards (see __init__) —
+            # score per partition, grouping by shard inside; zero exchange
             scored = cand.mapInPandas(_partition_scorer(fn), RESULT_SCHEMA)
         else:
             scored = cand.groupBy("shard").applyInPandas(fn, RESULT_SCHEMA)
-        top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        # k-row frame by construction — see the same pattern in search()
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-        out = top.withColumn("rank", F.row_number().over(w)).select(
-            "rank", "doc_id", "score", "match_count"
+        if n_queries == 1:
+            # TakeOrdered merge: its single-partition output already
+            # satisfies the window's query_id distribution, so a single
+            # search pays no shuffle (and no extra job) for the window
+            scored = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        # <= k rows per (query, shard) reach the window: the merge moves
+        # k·|queries|·shards rows, never corpus data
+        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+        out = (
+            scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select(*RANKED_COLS)
         )
-        return self.enrich(out) if enrich else out
-
-    def enrich(self, topk: DataFrame) -> DataFrame:
-        """J2: join doc metadata onto the (tiny) top-k —
-        QuerySearchController.php:307-336 semantics.  The k-row side is
-        the BUILD side of a broadcast hash join (broadcast on the right
-        of an inner join; a broadcast-left OUTER join cannot build left
-        and would silently fall back to a corpus-sized sort-merge).
-        Inner ≡ left here: every result doc_id exists in doc_stats."""
-        meta = self.doc_stats.select("doc_id", "repo", "path", "commit", "lang", "doc_len")
+        if not enrich:
+            return out
+        # the k·|queries|-row result is the BUILD side of a broadcast hash
+        # join (broadcast on the right of an inner join; a broadcast-left
+        # OUTER join cannot build left and would silently fall back to a
+        # corpus-sized sort-merge).  Inner ≡ left: every result doc_id
+        # exists in doc_stats.
+        meta = self.doc_stats.select("doc_id", *META_COLS)
         return (
-            meta.join(F.broadcast(topk), "doc_id", "inner")
-            .orderBy("rank")
-            .select("rank", "doc_id", "score", "match_count", "repo", "path", "commit", "lang", "doc_len")
+            meta.join(F.broadcast(out), "doc_id", "inner")
+            .orderBy("query_id", "rank")
+            .select(*RANKED_COLS, *META_COLS)
         )
-
-    def _empty(self, enrich: bool) -> DataFrame:
-        cols = "rank int, doc_id long, score double, match_count int"
-        if enrich:
-            cols += ", repo string, path string, commit string, lang string, doc_len int"
-        return self.spark.createDataFrame([], cols)
 
 
 # ---------------------------------------------------------------------------
@@ -572,64 +547,22 @@ def _partition_scorer(shard_fn):
     return run
 
 
-def _make_scorer(n_docs: int, avgdl: float, k: int, mode: str):
+def _make_multi_scorer(qterms: list[list[str]], n_docs: int, avgdl: float, k: int, mode: str):
+    """Per-shard BM25 scorer for a batch of queries (one for search()):
+    the shard group holds the UNION of every query's term rows; each
+    query scores its own subset with _score_bmw/_score_exhaustive, so its
+    rows do not depend on the rest of the batch."""
+
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["shard", "doc_id", "score", "match_count"]
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=cols)
         shard = int(pdf["shard"].iloc[0])
         pdf, mask = _split_tomb(pdf)
         if mask is not None:
             # a term whose LIVE df hit 0 has no term_stats row (left join
             # -> null df); all its postings are dead, drop the rows
             pdf = pdf[pdf["df"].notna()]
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=cols)
-        # idf from the joined df column (one value per term, exact ints)
-        dfs = dict(zip(pdf["term"], pdf["df"]))
-        idf = {t: float(bm25_idf(n_docs, int(d))) for t, d in dfs.items()}
-        terms_sorted = sorted(idf)
-        lo = int(pdf["first_doc"].min())
-        span = int(pdf["last_doc"].max()) - lo + 1
-        if mode == "exhaustive":
-            docs, scores, matches = _score_exhaustive(
-                pdf, terms_sorted, idf, avgdl, lo, span, k, mask
-            )
-        else:
-            docs, scores, matches = _score_bmw(
-                pdf, terms_sorted, idf, avgdl, lo, span, k, mask
-            )
-        return pd.DataFrame(
-            {
-                "shard": np.full(len(docs), shard, dtype=np.int32),
-                "doc_id": docs,
-                "score": scores,
-                "match_count": matches.astype(np.int32),
-            }
-        )
-
-    return score_shard
-
-
-def _make_multi_scorer(qterms: list[list[str]], n_docs: int, avgdl: float, k: int, mode: str):
-    """Per-shard scorer for search_many: the shard group holds the UNION
-    of every query's term rows; each query scores its own subset with the
-    exact single-query scorer (_score_bmw/_score_exhaustive), so per-query
-    results are bit-identical to search()."""
-
-    def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "shard", "doc_id", "score", "match_count"]
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=cols)
-        shard = int(pdf["shard"].iloc[0])
-        pdf, mask = _split_tomb(pdf)
-        if mask is not None:
-            pdf = pdf[pdf["df"].notna()]  # live df hit 0: fully masked
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=cols)
         dfs = dict(zip(pdf["term"], pdf["df"]))
         by_term = {t: g for t, g in pdf.groupby("term", sort=False)}
-        outs: list[pd.DataFrame] = []
+        outs = [_shard_rows(0, shard, *_NO_HITS)]
         # one decode memo per shard pass: blocks whose term is shared by
         # several queries decode once for the whole batch
         memo: dict = {}
@@ -647,27 +580,24 @@ def _make_multi_scorer(qterms: list[list[str]], n_docs: int, avgdl: float, k: in
             lo = int(sub["first_doc"].min())
             span = int(sub["last_doc"].max()) - lo + 1
             f = _score_exhaustive if mode == "exhaustive" else _score_bmw
-            docs, scores, matches = f(
-                sub, terms_sorted, idf, avgdl, lo, span, k, mask,
-                decode_memo=memo,
-            )
-            if len(docs):
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(docs), qid, dtype=np.int32),
-                            "shard": np.full(len(docs), shard, dtype=np.int32),
-                            "doc_id": docs,
-                            "score": scores,
-                            "match_count": matches.astype(np.int32),
-                        }
-                    )
-                )
-        if not outs:
-            return pd.DataFrame(columns=cols)
+            hits = f(sub, terms_sorted, idf, avgdl, lo, span, k, mask, decode_memo=memo)
+            outs.append(_shard_rows(qid, shard, *hits))
         return pd.concat(outs, ignore_index=True)
 
     return score_shard
+
+
+def _shard_rows(qid: int, shard: int, docs, scores, matches) -> pd.DataFrame:
+    """Scorer output (RESULT_SCHEMA) for one query in one shard."""
+    return pd.DataFrame(
+        {
+            "query_id": np.full(len(docs), qid, dtype=np.int32),
+            "shard": np.full(len(docs), shard, dtype=np.int32),
+            "doc_id": docs,
+            "score": scores,
+            "match_count": matches.astype(np.int32),
+        }
+    )
 
 
 def _make_phrase_scorer(terms_ordered: list[str], idf: dict[str, float], avgdl: float, k: int):
@@ -684,13 +614,9 @@ def _make_phrase_scorer(terms_ordered: list[str], idf: dict[str, float], avgdl: 
     uniq_sorted = sorted(set(terms_ordered))
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["shard", "doc_id", "score", "match_count"]
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=cols)
         shard = int(pdf["shard"].iloc[0])
+        no_rows = _shard_rows(0, shard, *_NO_HITS)
         pdf, mask = _split_tomb(pdf)
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=cols)
         # pass 1: decode doc_ids RAREST-TERM-FIRST with block-range
         # pre-intersection: rarity is estimated from block metadata alone
         # (Σ n_docs — no decode), the rarest term's blocks decode fully,
@@ -703,7 +629,7 @@ def _make_phrase_scorer(terms_ordered: list[str], idf: dict[str, float], avgdl: 
         # common term's.
         by_term = {t: g for t, g in pdf.groupby("term", sort=False)}
         if any(t not in by_term for t in uniq_sorted):
-            return pd.DataFrame(columns=cols)  # a phrase term absent here
+            return no_rows  # a phrase term absent here
         sizes = {t: int(by_term[t]["n_docs"].sum()) for t in uniq_sorted}
         by_rarity = sorted(uniq_sorted, key=lambda t: (sizes[t], t))
         # blk_dec[t]: (kept row positions in by_term[t], their decoded ids)
@@ -720,7 +646,7 @@ def _make_phrase_scorer(terms_ordered: list[str], idf: dict[str, float], avgdl: 
                 hi = np.searchsorted(cands, ld, side="right")
                 keep = np.flatnonzero(hi > lo)
             if keep.size == 0:
-                return pd.DataFrame(columns=cols)
+                return no_rows
             ids_col = g["doc_ids"].to_numpy()
             nd_col = g["n_docs"].to_numpy()
             ids_list = [
@@ -737,7 +663,7 @@ def _make_phrase_scorer(terms_ordered: list[str], idf: dict[str, float], avgdl: 
             else:
                 cands = np.intersect1d(cands, tdocs, assume_unique=True)
             if cands.size == 0:
-                return pd.DataFrame(columns=cols)
+                return no_rows
         # pass 2: decode positions (and dls) ONLY for blocks holding a
         # survivor, keeping only the survivors' entries — as FLAT
         # (doc, pos) arrays per term (no per-doc dict, no per-doc loop)
@@ -797,7 +723,7 @@ def _make_phrase_scorer(terms_ordered: list[str], idf: dict[str, float], avgdl: 
         for t in terms_ordered[1:]:
             occ = np.intersect1d(occ + 1, keys[t], assume_unique=True)
             if occ.size == 0:
-                return pd.DataFrame(columns=cols)
+                return no_rows
         docs_a, matches_a = np.unique(occ // M + dmin, return_counts=True)
         # vectorized BM25 over the phrase's distinct terms in ascending
         # term order — elementwise identical to the old per-doc loop
@@ -812,16 +738,44 @@ def _make_phrase_scorer(terms_ordered: list[str], idf: dict[str, float], avgdl: 
             tf_vec = t_tfs[t][o][np.searchsorted(t_docs[t][o], docs_a)]
             scores_a += idf[t] * bm25_tfpart(tf_vec, dl_vec, avgdl)
         order = np.lexsort((docs_a, -scores_a))[:k]
-        return pd.DataFrame(
-            {
-                "shard": np.full(len(order), shard, dtype=np.int32),
-                "doc_id": docs_a[order],
-                "score": scores_a[order],
-                "match_count": matches_a[order].astype(np.int32),
-            }
-        )
+        return _shard_rows(0, shard, docs_a[order], scores_a[order], matches_a[order])
 
     return score_shard
+
+
+# (doc_ids, scores, match_counts) of a query with no hit in a shard
+_NO_HITS = (np.zeros(0, dtype=np.int64), np.zeros(0), np.zeros(0, dtype=np.int64))
+
+
+def _decode_block(ids_b, tfs_b, dls_b, n, mask, memo):
+    """One block's (ids, tfs, dls), dead ids dropped.  ``memo``: a
+    per-shard-pass dict keyed by the block's raw payload triple, holding
+    post-mask decoded arrays — blocks shared by several queries' term
+    sets decode once per PASS instead of once per query.  Keying by VALUE
+    is the only exact choice: (term, block_id) repeats within a shard
+    (block_id restarts per encode run / segment), and object identity is
+    unstable (the Arrow-backed frame materializes a fresh bytes object
+    per access, so ids get recycled mid-pass).  Dict equality makes any
+    hash collision harmless, and hashing the payload is far cheaper than
+    varint-decoding it.  Scorers never mutate decoded arrays (fancy
+    indexing copies), so sharing is safe; the mask is constant within a
+    shard pass, so caching post-mask is exact.  The memo is capped at
+    DECODE_MEMO_CAP blocks — beyond that, cold blocks decode per query
+    (bounded worker memory beats decode savings on the long tail)."""
+    key = (ids_b, tfs_b, dls_b)
+    if memo is not None and key in memo:
+        return memo[key]
+    n = int(n)
+    ids = codec.decode_doc_ids(ids_b, n)
+    tfs = codec.decode_tfs(tfs_b, n)
+    dls = codec.varint_decode(dls_b, n)
+    if mask is not None:
+        keep = _mask_keep(ids, mask)
+        if not keep.all():
+            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
+    if memo is not None and len(memo) < DECODE_MEMO_CAP:
+        memo[key] = (ids, tfs, dls)
+    return ids, tfs, dls
 
 
 def _topk_select(local_hits: np.ndarray, scores: np.ndarray, matches: np.ndarray, lo: int, k: int):
@@ -832,21 +786,6 @@ def _topk_select(local_hits: np.ndarray, scores: np.ndarray, matches: np.ndarray
 
 def _score_exhaustive(pdf, terms_sorted, idf, avgdl, lo, span, k, mask=None,
                       decode_memo=None):
-    """``decode_memo`` (search_many): a per-shard-pass dict keyed by the
-    block's raw payload triple (doc_ids, tfs, dls bytes), holding
-    post-mask decoded (ids, tfs, dls) arrays — blocks shared by several
-    queries' term sets decode once per PASS instead of once per query.
-    Keying by VALUE is the only exact choice: (term, block_id) repeats
-    within a shard (block_id restarts per encode run / segment), and
-    object identity is unstable (the Arrow-backed frame materializes a
-    fresh bytes object per access, so ids get recycled mid-pass).  Dict
-    equality makes any hash collision harmless, and hashing the payload
-    is far cheaper than varint-decoding it.  Scorers never mutate decoded
-    arrays (fancy indexing copies), so sharing is safe; the mask is
-    constant within a shard pass, so caching post-mask is exact.  The
-    memo is capped at DECODE_MEMO_CAP blocks — beyond that, cold blocks
-    decode per query as before (bounded worker memory beats decode
-    savings on the long tail)."""
     scores = np.zeros(span, dtype=np.float64)
     matches = np.zeros(span, dtype=np.int64)
     by_term = {t: g for t, g in pdf.groupby("term", sort=False)}
@@ -859,20 +798,7 @@ def _score_exhaustive(pdf, terms_sorted, idf, avgdl, lo, span, k, mask=None,
         for n, ids_b, tfs_b, dls_b in zip(
             gs["n_docs"], gs["doc_ids"], gs["tfs"], gs["dls"]
         ):
-            key = (ids_b, tfs_b, dls_b) if decode_memo is not None else None
-            if key is not None and key in decode_memo:
-                ids, tfs, dls = decode_memo[key]
-            else:
-                n = int(n)
-                ids = codec.decode_doc_ids(ids_b, n)
-                tfs = codec.decode_tfs(tfs_b, n)
-                dls = codec.varint_decode(dls_b, n)
-                if mask is not None:
-                    keep = _mask_keep(ids, mask)
-                    if not keep.all():
-                        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                if key is not None and len(decode_memo) < DECODE_MEMO_CAP:
-                    decode_memo[key] = (ids, tfs, dls)
+            ids, tfs, dls = _decode_block(ids_b, tfs_b, dls_b, n, mask, decode_memo)
             if ids.size == 0:
                 continue
             loc = ids - lo
@@ -880,7 +806,7 @@ def _score_exhaustive(pdf, terms_sorted, idf, avgdl, lo, span, k, mask=None,
             matches[loc] += 1
     hits = np.flatnonzero(matches > 0)
     if hits.size == 0:
-        return np.zeros(0, dtype=np.int64), np.zeros(0), np.zeros(0, dtype=np.int64)
+        return _NO_HITS
     return _topk_select(hits, scores, matches, lo, k)
 
 
@@ -921,7 +847,7 @@ def _score_bmw(pdf, terms_sorted, idf, avgdl, lo, span, k, mask=None,
                  ids_b, tfs_b, dls_b, int(n))
             )
     if not blocks:
-        return np.zeros(0, dtype=np.int64), np.zeros(0), np.zeros(0, dtype=np.int64)
+        return _NO_HITS
     bounds = sorted({b[1] for b in blocks} | {b[2] + 1 for b in blocks})
     edges = np.asarray(bounds, dtype=np.int64)
     n_segs = len(edges) - 1
@@ -976,22 +902,7 @@ def _score_bmw(pdf, terms_sorted, idf, avgdl, lo, span, k, mask=None,
             bi = int(bi)
             b = blocks[bi]
             if bi not in decoded:
-                # cross-query memo (search_many): payload-value key; see
-                # _score_exhaustive for the key/sharing-safety argument
-                key = (b[4], b[5], b[6]) if decode_memo is not None else None
-                if key is not None and key in decode_memo:
-                    decoded[bi] = decode_memo[key]
-                else:
-                    ids = codec.decode_doc_ids(b[4], b[7])
-                    tfs = codec.decode_tfs(b[5], b[7])
-                    dls = codec.varint_decode(b[6], b[7])
-                    if mask is not None:
-                        keep = _mask_keep(ids, mask)
-                        if not keep.all():
-                            ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-                    decoded[bi] = (ids, tfs, dls)
-                    if key is not None and len(decode_memo) < DECODE_MEMO_CAP:
-                        decode_memo[key] = decoded[bi]
+                decoded[bi] = _decode_block(b[4], b[5], b[6], b[7], mask, decode_memo)
             ids, tfs, dls = decoded[bi]
             if ids.size == 0:
                 continue
@@ -1016,7 +927,7 @@ def _score_bmw(pdf, terms_sorted, idf, avgdl, lo, span, k, mask=None,
         if len(heap) == k:
             theta = heap[0]
     if not out_docs:
-        return np.zeros(0, dtype=np.int64), np.zeros(0), np.zeros(0, dtype=np.int64)
+        return _NO_HITS
     docs = np.concatenate(out_docs)
     scores = np.concatenate(out_scores)
     matches = np.concatenate(out_matches)

@@ -8,6 +8,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app: str = "moogle_spark",
@@ -31,6 +33,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # the Python workers import this package too: put the directory
+        # holding it on their path, whatever the caller's working dir
+        .config("spark.executorEnv.PYTHONPATH", _PKG_PARENT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -85,3 +85,20 @@ def test_cached_reader_survives_live_writer(spark, tmp_path):
     assert final == cold_res
     assert len(final) > 0  # the last batch's token is retrievable
     eng.unpersist()
+
+
+def test_two_engines_one_commit_keep_their_caches(spark, built_warehouse):
+    """Engines on one commit share Spark's cache entries (the CacheManager
+    keys plans canonically): retiring one engine must leave the other's
+    postings, term_stats and doc_stats cached."""
+    from pyspark import StorageLevel
+
+    from moogle_spark.query import SearchEngine
+
+    a = SearchEngine(spark, built_warehouse)
+    b = SearchEngine(spark, built_warehouse)
+    b.unpersist()
+    for name in ("postings", "term_stats", "doc_stats"):
+        assert getattr(a, name).storageLevel != StorageLevel.NONE, name
+    assert a.search("hotterm0", k=3).count() == 3
+    a.unpersist()

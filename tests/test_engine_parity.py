@@ -110,30 +110,30 @@ def test_phrase_search_matches_oracle(spark, built_warehouse, oracle_index):
     assert oracle_phrase_search(oracle_index, phrases[0], k=20).shape[0] > 0
 
 
-def test_search_many_parity(engine):
-    """search_many == N independent search() calls, row for row (same
-    scorers run on per-query row subsets), including queries whose terms
-    are partly or wholly absent and an empty query."""
-    batch = QUERIES[:8] + ["zzqq absentterm", "", "hotterm0 zzqq"]
-    got = engine.search_many(batch, k=10).toPandas()
+def _check_batch(got, batch, oracle_index, k):
+    """Each query's batch rows equal the oracle's top-k, bit for bit."""
     for qid, q in enumerate(batch):
         g = got[got["query_id"] == qid].sort_values("rank")
-        exp = engine.search(q, k=10).toPandas()
+        exp = oracle_search(oracle_index, q, k=k)
         assert list(g["doc_id"]) == list(exp["doc_id"]), (qid, q)
         assert [repr(s) for s in g["score"]] == [repr(s) for s in exp["score"]], q
         assert list(g["match_count"]) == list(exp["match_count"]), q
         assert list(g["rank"]) == list(exp["rank"]), q
+
+
+def test_search_many_parity(engine, oracle_index):
+    """search_many == the oracle per query, row for row, including
+    queries whose terms are partly or wholly absent and an empty query."""
+    batch = QUERIES[:8] + ["zzqq absentterm", "", "hotterm0 zzqq"]
+    got = engine.search_many(batch, k=10).toPandas()
+    _check_batch(got, batch, oracle_index, 10)
     assert len(got)  # batch found something overall
 
 
-def test_search_many_exhaustive_mode(engine):
+def test_search_many_exhaustive_mode(engine, oracle_index):
     batch = ["hotterm0 hotterm1", "def return import"]
     got = engine.search_many(batch, k=7, mode="exhaustive").toPandas()
-    for qid, q in enumerate(batch):
-        g = got[got["query_id"] == qid].sort_values("rank")
-        exp = engine.search(q, k=7, mode="exhaustive").toPandas()
-        assert list(g["doc_id"]) == list(exp["doc_id"])
-        assert [repr(s) for s in g["score"]] == [repr(s) for s in exp["score"]]
+    _check_batch(got, batch, oracle_index, 7)
 
 
 def test_search_many_all_empty(engine):
@@ -142,14 +142,23 @@ def test_search_many_all_empty(engine):
     assert list(out.columns) == ["query_id", "rank", "doc_id", "score", "match_count"]
 
 
-def test_search_many_enrich_parity(engine):
-    """search_many(enrich=True) == per-query search(enrich=True), row
-    for row, via one batch-wide broadcast metadata join."""
+def test_search_many_enrich_parity(engine, oracle_index):
+    """search_many(enrich=True): the oracle's rows per query, ordered by
+    (query_id, rank), each carrying its doc_stats metadata, via one
+    batch-wide broadcast metadata join."""
     batch = ["hotterm0", "def return"]
     got = engine.search_many(batch, k=5, enrich=True).toPandas()
-    cols = ["rank", "doc_id", "score", "match_count", "repo", "path",
-            "commit", "lang", "doc_len"]
-    for qid, q in enumerate(batch):
-        g = got[got["query_id"] == qid].sort_values("rank")[cols]
-        exp = engine.search(q, k=5, enrich=True).toPandas()[cols]
-        assert g.reset_index(drop=True).equals(exp.reset_index(drop=True)), q
+    _check_batch(got, batch, oracle_index, 5)
+    assert list(zip(got["query_id"], got["rank"])) == sorted(zip(got["query_id"], got["rank"]))
+    meta_cols = ["repo", "path", "commit", "lang", "doc_len"]
+    meta = engine.doc_stats.select("doc_id", *meta_cols).toPandas().set_index("doc_id")
+    assert got[meta_cols].equals(meta.loc[got["doc_id"], meta_cols].reset_index(drop=True))
+
+
+def test_single_search_plan_has_no_query_id_exchange(engine):
+    """A single search() merges with TakeOrdered before the per-query
+    window, so it pays no hash shuffle on query_id (that shuffle is a
+    third Spark job per search)."""
+    plan = engine.search("hotterm0 hotterm1", k=5)._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan
+    assert "Exchange hashpartitioning(query_id" not in plan
