@@ -80,8 +80,8 @@ MIN_POSTINGS_VERSION = 4
 # Spark's CacheManager keys cached plans canonically: engines on the same
 # commit (or a refresh whose table kept its files) share ONE cache entry,
 # and a plain unpersist() by one holder drops it for all.  So the engines
-# count their holders per cached plan: [DataFrame, semanticHash, holders].
-_PINS: list[list] = []
+# count their holders per cached plan, in a registry kept on the
+# SparkContext that owns the cache: [DataFrame, semanticHash, holders].
 _PINS_LOCK = threading.Lock()
 
 
@@ -89,14 +89,15 @@ def _holders(df: DataFrame, delta: int) -> int:
     """Add ``delta`` holders to ``df``'s cached plan; return how many
     remain (<= 0: the caller unpersists)."""
     with _PINS_LOCK:
+        pins = vars(df.sparkSession.sparkContext).setdefault("_moogle_pins", [])
         h = df.semanticHash()
-        e = next((e for e in _PINS if e[1] == h and e[0].sameSemantics(df)), None)
+        e = next((e for e in pins if e[1] == h and e[0].sameSemantics(df)), None)
         if e is None:
             e = [df, h, 0]
-            _PINS.append(e)
+            pins.append(e)
         e[2] += delta
         if e[2] <= 0:
-            _PINS.remove(e)
+            pins.remove(e)
         return e[2]
 
 
