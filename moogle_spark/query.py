@@ -380,7 +380,7 @@ class SearchEngine:
         multiquery_bench.py measures the gap).
 
         Blocks shared by multiple queries' terms decode ONCE per shard
-        pass: the scorers share a per-pass (term, block_id) decode memo,
+        pass: the scorers share a per-pass payload-keyed decode memo,
         so a 10k-query replay whose queries share hot terms pays decode
         per distinct block, not per (query, block).  Decoded arrays are
         never mutated by scorers (fancy indexing copies), so results are
