@@ -284,8 +284,7 @@ def main(argv: list[str] | None = None) -> int:
             "n_terms": int(cs["n_terms"]),
             "table_bytes": {
                 t: _bytes(wh.path(t))
-                for t in ["analyzed", "postings", "doc_stats", "doc_lens",
-                          "term_stats"]
+                for t in ["analyzed", "postings", "doc_stats", "term_stats"]
                 if wh.is_committed(t)
             },
         }

@@ -1,5 +1,5 @@
 """Index build: docs -> analyzed -> doc_stats/corpus_stats/term_stats ->
-compressed postings + doc_lens, with per-stage commits and lineage.
+compressed postings, with per-stage commits and lineage.
 
 Pipeline (SURVEY.md §3.2 rebuild; north_star stage list):
 
@@ -15,7 +15,7 @@ Pipeline (SURVEY.md §3.2 rebuild; north_star stage list):
                          incl. per-doc top-k terms map (MAX_INDEX_WORDS
                          semantics, services/indexer/main.py:165-166).
   stage 3 `term_stats` — df(t) via explicit two-phase salted aggregation
-                         (salt = hash(doc_id) % NSALT, then merge) — the
+                         (salt = hash(key) % NSALT, then merge) — the
                          skew-defusal the north_star mandates; replaces the
                          reference's O(V) per-term count_documents scans
                          (services/tfidf/data/mongo_client.py:86-93).
@@ -26,14 +26,11 @@ Pipeline (SURVEY.md §3.2 rebuild; north_star stage list):
                          analyzed parquet is scanned with a tuned split
                          size and each scan partition's docs are encoded
                          in place (vectorized mapInPandas) into
-                         delta+varint doc_ids/tfs/positions 128-doc
+                         delta+varint doc_ids/tfs/dls/positions 128-doc
                          blocks with per-block (max_tf, min_dl) block-max
                          metadata (avgdl-independent upper bounds).  Document-sharding bounds any hot
                          term's per-group postings to the shard size —
                          skew is structurally defused.
-  stage 6 `doc_lens`   — per-shard dense doc_len arrays (varint); an
-                         auxiliary artifact (scoring reads the inline
-                         per-block dls copy instead — POSTINGS_SCHEMA).
 
 Each stage commits via Warehouse.write (manifest = commit marker, with all
 rollup keys computed DURING the write job via task accumulators /
@@ -60,16 +57,18 @@ from __future__ import annotations
 import hashlib
 import math
 import os
+import time
 import uuid
 from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from itertools import count, repeat
 
 import numpy as np
 import pandas as pd
-from pyspark import TaskContext
+from pyspark import StorageLevel, TaskContext
 from pyspark.accumulators import AccumulatorParam
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import codec
@@ -77,6 +76,11 @@ from .analyzer import term_freqs_positions
 from .tables import FORMAT_VERSION, Warehouse, locked
 
 BLOCK_SIZE = 128
+KEYS = ["repo", "path", "commit"]
+# the staleness gate: a doc whose key, lang and content sha all match a
+# committed row is reused verbatim (lang too, or a lang-only change would
+# keep its stale lang in doc_stats forever)
+GATE = KEYS + ["lang", "content_sha256"]
 MAX_INDEX_WORDS = 1000  # reference MAX_INDEX_WORDS, services/indexer/utils/constants.py:23
 NSALT = 16
 # Constant encode-group target, independent of the session's parallelism:
@@ -161,19 +165,48 @@ def _analyze_fn(acc, cols: list[str], ids=None):
                 for c in cols:
                     out[c].append(row[c])
             yield pd.DataFrame(out, columns=cols)
-        rollup = hashlib.sha256(",".join(sorted(shas)).encode()).hexdigest()
-        acc.add(
-            {pid: {"partition_id": pid, "doc_count": len(shas),
-                   "posting_bytes": dl_sum, "sha256_rollup": rollup}}
-        )
+        _add_lineage(acc, pid, shas, dl_sum)
 
     return run
+
+
+def _assign_fn(acc, ids):
+    """The id-assign body: a mapInPandas function over already-analyzed
+    rows (ANALYZED_COLS minus doc_id/shard) that takes each row's
+    (doc_id, shard) from ``ids(pid)``, as _analyze_fn does, and adds the
+    same lineage row — nothing is re-tokenized."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pid = TaskContext.get().partitionId()
+        rule = ids(pid)
+        shas: list[str] = []
+        dl_sum = 0
+        for pdf in batches:
+            id_shard = np.array([rule(None) for _ in range(len(pdf))], dtype=np.int64)
+            id_shard = id_shard.reshape(-1, 2)
+            shas.extend(pdf["content_sha256"])
+            dl_sum += int(pdf["doc_len"].sum())
+            out = pdf.assign(doc_id=id_shard[:, 0], shard=id_shard[:, 1].astype(np.int32))
+            yield out[ANALYZED_COLS]
+        _add_lineage(acc, pid, shas, dl_sum)
+
+    return run
+
+
+def _add_lineage(acc, pid: int, shas: list[str], dl_sum: int) -> None:
+    """Partition ``pid``'s lineage row: doc_count, posting_bytes = summed
+    doc_len, sha256_rollup over the sorted content shas."""
+    rollup = hashlib.sha256(",".join(sorted(shas)).encode()).hexdigest()
+    acc.add(
+        {pid: {"partition_id": pid, "doc_count": len(shas),
+               "posting_bytes": dl_sum, "sha256_rollup": rollup}}
+    )
 
 
 # dls = varint doc lengths inline per block (impact-index style norms):
 # query-time scoring needs (tf, dl) per posting, so keeping dl beside tf
 # makes a posting block self-contained — no per-query join/cogroup with a
-# doc_lens table (measured: the cogroup shuffle dominated query latency).
+# doc-length table (measured: the cogroup shuffle dominated query latency).
 # max_tf/min_dl replace the old precomputed block_max_tf float: the BM25
 # tf-part is monotone increasing in tf and decreasing in dl, so
 # bm25_tfpart(max_tf, min_dl, avgdl) is a valid per-block upper bound
@@ -187,10 +220,11 @@ POSTINGS_SCHEMA = (
     "dls binary, pos_ints int, max_tf int, min_dl int"
 )
 
-DOC_LENS_SCHEMA = "shard int, first_doc long, n_docs int, doc_lens binary"
+DOWNSTREAM_STAGES = ["doc_stats", "term_stats", "corpus_stats", "postings"]
 
 
-DOWNSTREAM_STAGES = ["doc_stats", "term_stats", "corpus_stats", "postings", "doc_lens"]
+def _sha_col():
+    return F.sha2(F.encode(F.coalesce(F.col("content"), F.lit("")), "utf-8"), 256)
 
 
 def _analyzed_build_id(wh: Warehouse) -> str:
@@ -221,7 +255,7 @@ class BuildInfo:
     shard_size: int
     stages_run: list[str]
     stages_skipped: list[str]
-    stage_secs: dict | None = None  # wall-clock per stage (overlaps under parallel=True)
+    stage_secs: dict | None = None  # wall-clock per stage (branches overlap)
 
 
 def default_shards(n_docs: int) -> int:
@@ -235,15 +269,14 @@ def build_index(
     warehouse: str | Warehouse,
     n_shards: int | None = None,
     force: bool = False,
-    parallel: bool = True,
     doc_id_mode: str = "rank",
 ) -> BuildInfo:
     """Run all stages, skipping any already committed (resume).
 
     After `analyzed` commits, the remaining stages only depend on it (plus
     corpus_stats on term_stats), so they are submitted as CONCURRENT Spark
-    jobs (parallel=True): the scheduler interleaves their tasks, hiding
-    each job's scheduling/commit latency behind the others' compute.  Works
+    jobs: the scheduler interleaves their tasks, hiding each job's
+    scheduling/commit latency behind the others' compute.  Works
     identically on a cluster (FIFO scheduler backfills idle executors);
     per-stage commit/resume semantics are unchanged because each stage
     writes its own table + manifest atomically.
@@ -272,7 +305,6 @@ def build_index(
     run: list[str] = []
     skip: list[str] = []
     stage_secs: dict[str, float] = {}
-    import time as _time
 
     def stage(name: str, fn) -> None:
         committed = (
@@ -290,12 +322,11 @@ def build_index(
         if committed:
             skip.append(name)
             return
-        t0 = _time.time()
+        t0 = time.time()
         fn()
-        stage_secs[name] = round(_time.time() - t0, 2)
+        stage_secs[name] = round(time.time() - t0, 2)
         run.append(name)
 
-    state: dict = {}
     if doc_id_mode == "stable":
         from .stable import _stage_analyzed_stable
 
@@ -304,14 +335,20 @@ def build_index(
             lambda: _stage_analyzed_stable(spark, docs, wh, n_shards),
         )
     else:
-        stage("analyzed", lambda: _stage_analyzed(spark, docs, wh, n_shards, state))
+        stage("analyzed", lambda: _write_ranked(
+            spark, wh, docs, n_shards,
+            lambda acc, ids: _analyze_fn(acc, ANALYZED_COLS, ids),
+        ))
     analyzed = wh.read(spark, "analyzed")
     man = wh.manifest("analyzed")
     n_docs, shards, shard_size = man["n_docs"], man["n_shards"], man["shard_size"]
 
     def _term_then_corpus() -> None:
-        stage("term_stats", lambda: _stage_term_stats(spark, analyzed, wh))
-        stage("corpus_stats", lambda: _stage_corpus_stats(spark, wh, n_docs))
+        stage("term_stats", lambda: _stage_term_stats(analyzed, wh))
+        stage("corpus_stats", lambda: _write_corpus_stats(
+            wh, n_docs, int(man["sum_dl"]), int(wh.manifest("term_stats")["n_terms"]),
+            _analyzed_build_id(wh),
+        ))
 
     # postings first (the Python-UDF-heavy branch), paired with the pure-JVM
     # branches; two-way concurrency overlaps scheduling gaps without
@@ -321,7 +358,6 @@ def build_index(
         lambda: stage("postings", lambda: _stage_postings(spark, wh)),
         lambda: stage("doc_stats", lambda: _stage_doc_stats(spark, analyzed, wh)),
         _term_then_corpus,
-        lambda: stage("doc_lens", lambda: _stage_doc_lens(spark, analyzed, wh, shard_size)),
     ]
     # Tune the file-scan split size for the zero-shuffle postings encode
     # BEFORE any branch launches and restore only after all finish: every
@@ -352,35 +388,15 @@ def build_index(
         else:
             conf.set(key, old)
     try:
-        if parallel:
-            from concurrent.futures import ThreadPoolExecutor
-
-            # Optionally cache the analyzed table (all branches scan it).
-            # Default OFF: parquet re-reads are cheap (columnar, pruned)
-            # and caching the widest table competes with shuffle/UDF
-            # memory at scale on local[32].
-            cache = os.environ.get("MOOGLE_CACHE_ANALYZED", "0") == "1"
-            if cache:
-                analyzed.persist()
-            try:
-                with ThreadPoolExecutor(max_workers=2) as ex:
-                    futures = [ex.submit(b) for b in branches]
-                    for f in futures:
-                        f.result()
-            finally:
-                if cache:
-                    analyzed.unpersist()
-        else:
-            for b in branches:
-                b()
+        with ThreadPoolExecutor(max_workers=2) as ex:
+            for f in [ex.submit(b) for b in branches]:
+                f.result()
     finally:
         _restore("spark.sql.files.maxPartitionBytes", old_mpb)
         _restore("spark.sql.files.openCostInBytes", old_open)
-    order = ["analyzed", "doc_stats", "term_stats", "corpus_stats", "postings", "doc_lens"]
+    order = ["analyzed", *DOWNSTREAM_STAGES]
     run.sort(key=order.index)
     skip.sort(key=order.index)
-    if os.environ.get("MOOGLE_STAGE_TIMING"):
-        print("STAGE_TIMING " + str(stage_secs))
     return BuildInfo(n_docs, shards, shard_size, run, skip, stage_secs)
 
 
@@ -390,7 +406,6 @@ def incremental_build(
     docs: DataFrame,
     warehouse: str | Warehouse,
     n_shards: int | None = None,
-    parallel: bool = True,
     mode: str = "full",
     strategy: str = "shards",
     auto_compact_ratio: float | None = None,
@@ -446,18 +461,15 @@ def incremental_build(
             )
         # cold path (no committed index): doc_id_mode picks the id scheme
         # of the FIRST build; later calls route on the committed manifest
-        return build_index(
-            spark, docs, wh, n_shards=n_shards, parallel=parallel,
-            doc_id_mode=doc_id_mode,
-        )
+        return build_index(spark, docs, wh, n_shards=n_shards, doc_id_mode=doc_id_mode)
     if wh.manifest("analyzed").get("doc_id_mode", "rank") == "stable":
         # stable-id warehouse: the shard-scoped O(churn) path owns it
         from .stable import incremental_build_stable
 
         return incremental_build_stable(
-            spark, docs, wh, mode=mode, parallel=parallel,
-            strategy=strategy, auto_compact_ratio=auto_compact_ratio,
-            maintenance=maintenance, deletes=deletes,
+            spark, docs, wh, mode=mode, strategy=strategy,
+            auto_compact_ratio=auto_compact_ratio, maintenance=maintenance,
+            deletes=deletes,
         )
     if deletes is not None:
         raise ValueError(
@@ -466,28 +478,16 @@ def incremental_build(
             "the reduced snapshot"
         )
 
-    import time as _time
-
-    from pyspark import StorageLevel
-
-    t0 = _time.time()
-    keys = ["repo", "path", "commit"]
+    t0 = time.time()
     carry = ["lang", "content_sha256", "doc_len", "terms", "tfs", "positions"]
-    old = wh.read(spark, "analyzed").select(*keys, *carry)
-    incoming = docs.withColumn(
-        "content_sha256",
-        F.sha2(F.encode(F.coalesce(F.col("content"), F.lit("")), "utf-8"), 256),
-    )
-    # lang is part of the gate: a doc whose content is unchanged but whose
-    # lang metadata changed must still be re-ingested (the reused row would
-    # otherwise carry the stale lang into doc_stats forever)
-    gate = keys + ["lang", "content_sha256"]
+    old = wh.read(spark, "analyzed").select(*KEYS, *carry)
+    incoming = docs.withColumn("content_sha256", _sha_col())
     # changed = new key OR same key with different content/lang
-    changed = incoming.join(old.select(*gate), gate, "left_anti")
+    changed = incoming.join(old.select(*GATE), GATE, "left_anti")
     if mode == "full":
-        reused = old.join(incoming.select(*gate), gate, "left_semi")
+        reused = old.join(incoming.select(*GATE), GATE, "left_semi")
     else:
-        reused = old.join(changed.select(*keys), keys, "left_anti")
+        reused = old.join(changed.select(*KEYS), KEYS, "left_anti")
 
     # TRUE NO-OP short-circuit (the daily-cron case): nothing changed,
     # nothing added, and — in full mode — nothing removed, so the
@@ -516,97 +516,37 @@ def incremental_build(
                     stages_skipped=["analyzed"] + DOWNSTREAM_STAGES,
                     stage_secs={},
                 )
-            return build_index(spark, docs, wh, n_shards=n_shards, parallel=parallel)
+            return build_index(spark, docs, wh, n_shards=n_shards)
 
-    sc = spark.sparkContext
-    tok_acc = sc.accumulator({}, _LineageAccParam())
-
-    analyzed_new = changed.select(*keys, "lang", "content").mapInPandas(
-        _analyze_fn(tok_acc, keys + carry), analyzed_schema(keys + carry)
+    tok_acc = spark.sparkContext.accumulator({}, _LineageAccParam())
+    analyzed_new = changed.select(*KEYS, "lang", "content").mapInPandas(
+        _analyze_fn(tok_acc, KEYS + carry), analyzed_schema(KEYS + carry)
     )
     # persist BEFORE the range repartition: repartitionByRange runs a
     # separate range-boundary sampling job over its input, which would
     # otherwise re-execute the tokenizer (and the sha anti-joins) a
     # second time — doubling exactly the cost the gate exists to save
     pre = reused.unionByName(analyzed_new).persist(StorageLevel.DISK_ONLY)
-
-    # ---- doc_id reassignment: the SAME two-pass global-sorted-rank
-    # protocol as _stage_analyzed, minus the tokenizer — cheap relative
-    # to analysis, and what makes the output bit-equal to from-scratch.
-    par = sc.defaultParallelism
-    srt = (
-        pre.repartitionByRange(4 * par, *keys)
-        .sortWithinPartitions(*keys)
-        .persist(StorageLevel.DISK_ONLY)
-    )
-    counts = (
-        srt.select(F.spark_partition_id().alias("pid")).groupBy("pid").count().collect()
-    )
-    by_pid = {r["pid"]: r["count"] for r in counts}
-    n_docs = int(sum(by_pid.values()))
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(by_pid):
-        offsets[pid] = acc
-        acc += by_pid[pid]
-    shards = n_shards or default_shards(n_docs)
-    shard_size = math.ceil(n_docs / shards) if n_docs else 1
-    b_off = sc.broadcast(offsets)
-    lin_acc = sc.accumulator({}, _LineageAccParam())
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pid = TaskContext.get().partitionId()
-        next_id = b_off.value.get(pid, 0) + 1
-        part_shas: list[str] = []
-        part_dl = 0
-        for pdf in batches:
-            n = len(pdf)
-            ids = np.arange(next_id, next_id + n, dtype=np.int64)
-            next_id += n
-            part_shas.extend(pdf["content_sha256"])
-            part_dl += int(pdf["doc_len"].sum())
-            out = pdf.assign(doc_id=ids, shard=((ids - 1) // shard_size).astype(np.int32))
-            yield out[["doc_id", "repo", "path", "commit", "lang",
-                       "content_sha256", "shard", "doc_len",
-                       "terms", "tfs", "positions"]]
-        rollup = hashlib.sha256(",".join(sorted(part_shas)).encode()).hexdigest()
-        lin_acc.add(
-            {pid: {"partition_id": pid, "doc_count": len(part_shas),
-                   "posting_bytes": part_dl, "sha256_rollup": rollup}}
-        )
-
-    analyzed = srt.mapInPandas(assign, ANALYZED_SCHEMA)
-    # write to analyzed_next, then promote: Warehouse.write rmtree's its
-    # target first, so writing `analyzed` in place would destroy the
-    # only copy of the committed corpus while the job that REBUILDS it
-    # is still reading from caches of it — a kill (or cache-block loss)
-    # mid-write would lose the index.  The promote is a directory
-    # rename; an interrupted promote is finished at the next
+    # the SAME rank-id writer as build_index, with the id-assign body
+    # in place of the tokenizer: what makes the output bit-equal to
+    # from-scratch.  It writes analyzed_next, then promotes: Warehouse.write
+    # rmtree's its target first, so writing `analyzed` in place would
+    # destroy the only copy of the committed corpus while the job that
+    # REBUILDS it is still reading from caches of it — a kill (or
+    # cache-block loss) mid-write would lose the index.  The promote is a
+    # directory rename; an interrupted promote is finished at the next
     # incremental_build (committed analyzed_next wins).
-    wh.write(
-        analyzed,
-        "analyzed_next",
-        stage="analyzed",
-        partition_by=["shard"],
-        meta={"n_docs": n_docs, "n_shards": shards, "shard_size": shard_size,
-              "build_id": uuid.uuid4().hex},
-        meta_fn=lambda: {
-            "sum_dl": int(sum(r["posting_bytes"] for r in lin_acc.value.values()))
-        },
-    )
-    srt.unpersist()
+    _write_ranked(spark, wh, pre, n_shards, _assign_fn, dst="analyzed_next")
     pre.unpersist()
-    wh.promote("analyzed_next", "analyzed")
-    wh.append_lineage_rows("analyzed", list(lin_acc.value.values()))
     wh.append_lineage_rows("incremental_tokenize", list(tok_acc.value.values()))
-    t_analyzed = round(_time.time() - t0, 2)
+    t_analyzed = round(time.time() - t0, 2)
 
     # downstream stages rebuild from the fresh analyzed table via the
     # normal machinery (analyzed is committed -> skipped; the dropped
     # tables re-run with identical plans + commit semantics)
-    for t in ["doc_stats", "term_stats", "corpus_stats", "postings", "doc_lens"]:
+    for t in DOWNSTREAM_STAGES:
         wh.drop(t)
-    info = build_index(spark, docs, wh, n_shards=n_shards, parallel=parallel)
+    info = build_index(spark, docs, wh, n_shards=n_shards)
     info.stages_run = ["analyzed"] + info.stages_run
     info.stages_skipped = [s for s in info.stages_skipped if s != "analyzed"]
     info.stage_secs = {"analyzed": t_analyzed, **(info.stage_secs or {})}
@@ -616,33 +556,25 @@ def incremental_build(
 # ---------------------------------------------------------------------------
 
 
-def _tick(label: str, t0: float) -> float:
-    import time as _time
-
-    t1 = _time.time()
-    if os.environ.get("MOOGLE_STAGE_TIMING"):
-        print(f"SUBSTEP {label} {t1 - t0:.2f}s", flush=True)
-    return t1
-
-
-def _stage_analyzed(
-    spark: SparkSession, docs: DataFrame, wh: Warehouse, n_shards: int | None, state: dict
+def _write_ranked(
+    spark: SparkSession, wh: Warehouse, rows: DataFrame, n_shards: int | None,
+    body, dst: str = "analyzed",
 ) -> None:
-    import time as _time
-
-    from pyspark import StorageLevel
-
-    t = _time.time()
-    keys = ["repo", "path", "commit"]
-    par = spark.sparkContext.defaultParallelism
+    """The rank-id analyzed writer: doc_id = global (repo, path, commit)
+    sorted rank, in two passes (range sort, per-partition counts ->
+    offsets), then ``body(acc, ids)`` — _analyze_fn to tokenize, or
+    _assign_fn over already-analyzed rows — writes ``dst`` and its
+    lineage.  A ``dst`` other than analyzed is promoted over it."""
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
     # 4x partitions per core: smoother task waves (a straggler costs
     # 1/(4*cores) of a wave, not 1/cores) — Python workers are reused, so
     # the extra task count is nearly free.  DISK_ONLY persist: the sorted
-    # corpus is re-read once by the analyze pass; keeping it off-heap
+    # corpus is re-read once by the body pass; keeping it off-heap
     # (page cache) avoids competing with UDF/shuffle memory and GC.
     srt = (
-        docs.repartitionByRange(4 * par, *keys)
-        .sortWithinPartitions(*keys)
+        rows.repartitionByRange(4 * par, *KEYS)
+        .sortWithinPartitions(*KEYS)
         .persist(StorageLevel.DISK_ONLY)
     )
     # pass 1: per-partition counts -> deterministic global offsets.
@@ -654,7 +586,6 @@ def _stage_analyzed(
         .count()
         .collect()
     )
-    t = _tick("analyzed.sort_count", t)
     by_pid = {r["pid"]: r["count"] for r in counts}
     n_docs = int(sum(by_pid.values()))
     offsets: dict[int, int] = {}
@@ -664,10 +595,9 @@ def _stage_analyzed(
         acc += by_pid[pid]
     shards = n_shards or default_shards(n_docs)
     shard_size = math.ceil(n_docs / shards) if n_docs else 1
-    sc = spark.sparkContext
     b_off = sc.broadcast(offsets)
     # lineage rollup rides on an accumulator filled by the SAME tasks that
-    # tokenize+write — no read-back scan job afterwards.
+    # run the body and write — no read-back scan job afterwards.
     lin_acc = sc.accumulator({}, _LineageAccParam())
 
     def ids(pid: int):
@@ -679,13 +609,12 @@ def _stage_analyzed(
 
         return rule
 
-    analyzed = srt.mapInPandas(_analyze_fn(lin_acc, ANALYZED_COLS, ids), ANALYZED_SCHEMA)
     # sum_dl is in the accumulator once the data write finishes, so the
     # manifest (the commit marker) carries it atomically — a kill can
     # never leave a committed-but-rollup-less stage behind.
     wh.write(
-        analyzed,
-        "analyzed",
+        srt.mapInPandas(body(lin_acc, ids), ANALYZED_SCHEMA),
+        dst,
         stage="analyzed",
         partition_by=["shard"],
         meta={"n_docs": n_docs, "n_shards": shards, "shard_size": shard_size,
@@ -694,10 +623,10 @@ def _stage_analyzed(
             "sum_dl": int(sum(r["posting_bytes"] for r in lin_acc.value.values()))
         },
     )
-    t = _tick("analyzed.write", t)
     srt.unpersist()
+    if dst != "analyzed":
+        wh.promote(dst, "analyzed")
     wh.append_lineage_rows("analyzed", list(lin_acc.value.values()))
-    _tick("analyzed.lineage", t)
 
 
 def _stage_doc_stats(
@@ -737,47 +666,57 @@ def _stage_doc_stats(
     wh.append_lineage_rows(dst, wh.footer_lineage_rows(dst))
 
 
-def _stage_term_stats(spark: SparkSession, analyzed: DataFrame, wh: Warehouse) -> None:
-    # df(t): terms[] is per-doc-distinct, so df = count of rows per term.
-    # Explicit two-phase salted aggregation (north_star skew mandate): a hot
-    # term's rows first collapse within each of NSALT salt groups
-    # (map-side + salted shuffle), then the <=NSALT partials merge.
-    exploded = analyzed.select(
+def _term_counts(rows: DataFrame, out: str = "df") -> DataFrame:
+    """df(t) over ``rows`` (terms[] is per-doc-distinct, so df = rows per
+    term) as column ``out``.  Explicit two-phase salted aggregation
+    (north_star skew mandate): a hot term's rows first collapse within
+    each of NSALT salt groups (map-side + salted shuffle), then the
+    <=NSALT partials merge.  The salt is a key hash, so rows without a
+    doc_id (a delta before ranking) count the same way."""
+    exploded = rows.select(
         F.explode("terms").alias("term"),
-        (F.pmod(F.xxhash64("doc_id"), F.lit(NSALT))).alias("salt"),
+        F.pmod(F.xxhash64(*KEYS), F.lit(NSALT)).alias("salt"),
     )
     partial = exploded.groupBy("term", "salt").agg(F.count(F.lit(1)).alias("c"))
-    df_t = partial.groupBy("term").agg(F.sum("c").cast("long").alias("df"))
-    # n_terms via an Observation on the write job itself (no second scan),
-    # folded into the manifest atomically by meta_fn.
-    from pyspark.sql import Observation
+    return partial.groupBy("term").agg(F.sum("c").cast("long").alias(out))
 
-    obs = Observation("term_stats")
-    df_t = df_t.observe(obs, F.count(F.lit(1)).alias("n_terms"))
+
+def _write_term_stats(wh: Warehouse, df_t: DataFrame, ref: str, dst: str = "term_stats") -> int:
+    """Write (term, df) rows as ``dst`` and return its n_terms, counted by
+    an Observation on the write job itself (no second scan) and folded
+    into the manifest atomically by meta_fn."""
+    obs = Observation(dst)
     wh.write(
-        df_t,
-        "term_stats",
+        df_t.observe(obs, F.count(F.lit(1)).alias("n_terms")),
+        dst,
         stage="term_stats",
         sort_by=["term"],
-        meta={"analyzed_ref": _analyzed_build_id(wh)},
+        meta={"analyzed_ref": ref},
         meta_fn=lambda: {"n_terms": int(obs.get["n_terms"])},
     )
+    return int(wh.manifest(dst)["n_terms"])
+
+
+def _stage_term_stats(analyzed: DataFrame, wh: Warehouse) -> None:
+    _write_term_stats(wh, _term_counts(analyzed), _analyzed_build_id(wh))
     wh.append_lineage_rows("term_stats", wh.footer_lineage_rows("term_stats"))
 
 
-def _stage_corpus_stats(spark: SparkSession, wh: Warehouse, n_docs: int) -> None:
-    # all three scalars were rolled up during earlier stages (manifest
-    # metadata) — written driver-side with pyarrow: zero Spark jobs.
+def _write_corpus_stats(
+    wh: Warehouse, n_docs: int, sum_dl: int, n_terms: int, ref: str,
+    dst: str = "corpus_stats",
+) -> None:
+    """The one-row corpus scalars table.  All three were rolled up during
+    earlier writes (manifest metadata), so it is written locally with
+    pyarrow (Warehouse.write_local): zero Spark jobs."""
     import pyarrow as pa
 
-    sum_dl = int(wh.manifest("analyzed")["sum_dl"])
-    n_terms = int(wh.manifest("term_stats")["n_terms"])
     wh.write_local(
-        [{"n_docs": int(n_docs), "sum_dl": sum_dl, "n_terms": n_terms}],
+        [{"n_docs": int(n_docs), "sum_dl": int(sum_dl), "n_terms": int(n_terms)}],
         {"n_docs": pa.int64(), "sum_dl": pa.int64(), "n_terms": pa.int64()},
-        "corpus_stats",
+        dst,
         stage="corpus_stats",
-        meta={"analyzed_ref": _analyzed_build_id(wh)},
+        meta={"analyzed_ref": ref},
     )
 
 
@@ -951,9 +890,6 @@ def _stage_postings(
     # every parallelism level — constant: identical work at N and 4N.
     sc = spark.sparkContext
     lin_acc = sc.accumulator({}, _LineageAccParam())
-
-    import time as _t
-
     py_acc = sc.accumulator({}, _LineageAccParam())
 
     def encode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -965,9 +901,9 @@ def _stage_postings(
         if pdfs:
             part = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
             for _, g in part.groupby("shard", sort=True):
-                t0 = _t.perf_counter()
+                t0 = time.perf_counter()
                 out = encode_shard(g.reset_index(drop=True))
-                t_py += _t.perf_counter() - t0
+                t_py += time.perf_counter() - t0
                 if len(out):
                     n_blocks += len(out)
                     n_bytes += int(
@@ -984,9 +920,6 @@ def _stage_postings(
 
     # (the scan split size is tuned by build_index around ALL branches —
     # one consistent session value, no mid-flight conf race)
-    import time as _time
-
-    t = _time.time()
     base = wh.read(spark, src).select(
         "shard", "doc_id", "doc_len", "terms", "tfs", "positions"
     )
@@ -1009,38 +942,4 @@ def _stage_postings(
             )
         },
     )
-    t = _tick("postings.write", t)
-    if os.environ.get("MOOGLE_STAGE_TIMING"):
-        tot = sum(r["encode_ms"] for r in py_acc.value.values()) / 1000.0
-        print(f"SUBSTEP postings.python_cpu_total {tot:.1f}s", flush=True)
     wh.append_lineage_rows(dst, list(lin_acc.value.values()))
-    _tick("postings.lineage", t)
-
-
-def _stage_doc_lens(
-    spark: SparkSession, analyzed: DataFrame, wh: Warehouse, shard_size: int,
-    dst: str = "doc_lens",
-) -> None:
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        first = int(ids[0])
-        # shard doc_ids are contiguous by construction; assert the invariant
-        assert ids[-1] - first + 1 == len(ids), "doc_ids not contiguous within shard"
-        dls = pdf["doc_len"].to_numpy(dtype=np.int64)
-        return pd.DataFrame(
-            {
-                "shard": [int(pdf["shard"].iloc[0])],
-                "first_doc": [first],
-                "n_docs": [len(ids)],
-                "doc_lens": [codec.varint_encode(dls)],
-            }
-        )
-
-    dl = analyzed.select("shard", "doc_id", "doc_len").groupBy("shard").applyInPandas(
-        pack, DOC_LENS_SCHEMA
-    )
-    # partitioned by shard so the stable-id incremental path can swap a
-    # touched shard's doc_lens partition like every other per-shard table
-    wh.write(dl, dst, stage="doc_lens", partition_by=["shard"],
-             meta={"analyzed_ref": _analyzed_build_id(wh)})

@@ -14,9 +14,9 @@ cached shard partitions, or groupBy(shard).applyInPandas cold) -> a
 row_number window partitioned by query_id -> optional broadcast metadata
 join.  The postings DataFrame is pre-partitioned by shard and cached at
 engine init, so scoring reuses that partitioning — NO per-query shuffle
-of postings, only the k-rows-per-shard result merge.  (The previous
-design cogrouped postings with a doc_lens table; two shuffles per query
-dominated latency.)
+of postings, only the k-rows-per-shard result merge.  (An earlier
+design cogrouped postings with a separate doc-length table; two shuffles
+per query dominated latency.)
 
 One path serves every query form: search() is search_many([query]) and
 search_phrase() runs the phrase scorer through the same tail
@@ -146,7 +146,11 @@ class SearchEngine:
         # files — see Warehouse.read_snapshot (unchanged files: _holders)
         self.postings = self.wh.read_snapshot(spark, "postings")
         self.term_stats = self.wh.read_snapshot(spark, "term_stats")
-        self.doc_stats = self.wh.read_snapshot(spark, "doc_stats")
+        # only the columns the metadata join reads are pinned (the per-doc
+        # top_terms map alone is about 100x their size)
+        self.doc_stats = self.wh.read_snapshot(spark, "doc_stats").select(
+            "doc_id", *META_COLS
+        )
         # segmented warehouse (segments.py): fold the tombstones into the
         # postings as per-shard mask rows under the reserved TOMB term —
         # each shard group's scorer then receives its own dead-id mask
@@ -489,10 +493,15 @@ class SearchEngine:
         # OUTER join cannot build left and would silently fall back to a
         # corpus-sized sort-merge).  Inner ≡ left: every result doc_id
         # exists in doc_stats.
-        meta = self.doc_stats.select("doc_id", *META_COLS)
+        # The k·|queries| joined rows are ordered in ONE partition: a
+        # global orderBy would plan a range shuffle, whose boundary
+        # sampling is an extra job per search.  coalesce (one task scans
+        # the pinned narrow doc_stats and probes the broadcast) measured
+        # one job fewer than repartition(1)'s shuffle.
         return (
-            meta.join(F.broadcast(out), "doc_id", "inner")
-            .orderBy("query_id", "rank")
+            self.doc_stats.join(F.broadcast(out), "doc_id", "inner")
+            .coalesce(1)
+            .sortWithinPartitions("query_id", "rank")
             .select(*RANKED_COLS, *META_COLS)
         )
 

@@ -8,8 +8,7 @@ immutable base plus small delta segments plus a deleted-docs mask),
 re-expressed as Spark table partitions:
 
   * an incremental run writes the changed docs as a NEW GENERATION —
-    extra partitions of the SAME analyzed/doc_stats/postings/doc_lens
-    tables under
+    extra partitions of the SAME analyzed/doc_stats/postings tables under
         shard  = gen * n_shards + base_shard        (base_shard from the
                                                      frozen key hash)
         doc_id = shard * STRIDE + within-shard rank

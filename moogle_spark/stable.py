@@ -12,13 +12,13 @@ hash and ranks only WITHIN the shard:
 
 A churned doc perturbs only its own shard's ranks, so a daily 10%-churn
 incremental re-tokenizes only the changed docs (the same sha gate as
-rank mode) AND re-encodes only the touched shards' postings/doc_stats/
-doc_lens partitions — the reference's per-doc staleness-gate semantics
+rank mode) AND re-encodes only the touched shards' postings/doc_stats
+partitions — the reference's per-doc staleness-gate semantics
 (services/indexer/main.py:140-143) at Spark scale.  Every per-shard
 invariant the scorers rely on survives: doc_ids stay contiguous within
-a shard (dense accumulation spans, doc_lens packing), and the postings
-block-max metadata is avgdl-independent (build.py POSTINGS_SCHEMA), so
-untouched shards' WAND bounds remain exact when the corpus avgdl moves.
+a shard (dense accumulation spans), and the postings block-max metadata
+is avgdl-independent (build.py POSTINGS_SCHEMA), so untouched shards'
+WAND bounds remain exact when the corpus avgdl moves.
 
 (A raw xxhash64 doc_id — the obvious alternative — would both collide at
 10^12 docs (63-bit birthday bound) and destroy the dense per-shard id
@@ -52,14 +52,18 @@ from .build import (
     ANALYZED_COLS,
     ANALYZED_SCHEMA,
     DOWNSTREAM_STAGES,
-    NSALT,
+    GATE,
+    KEYS,
     BuildInfo,
     _analyze_fn,
     _downstream_current,
     _LineageAccParam,
-    _stage_doc_lens,
+    _sha_col,
     _stage_doc_stats,
     _stage_postings,
+    _term_counts,
+    _write_corpus_stats,
+    _write_term_stats,
     analyzed_schema,
     default_shards,
 )
@@ -70,14 +74,11 @@ from .tables import Warehouse, locked
 # the phrase scorer's composite-key overflow guard).
 STRIDE = 1 << 33
 
-KEYS = ["repo", "path", "commit"]
-GATE = KEYS + ["lang", "content_sha256"]
 NO_ID = ANALYZED_COLS[1:]  # an analyzed row before commit_delta ranks it
 _DELTA_TABLES = [
     ("analyzed", "analyzed_delta"),
     ("doc_stats", "doc_stats_delta"),
     ("postings", "postings_delta"),
-    ("doc_lens", "doc_lens_delta"),
 ]
 _STAGING = [d for _, d in _DELTA_TABLES] + [
     "term_stats_next", "corpus_stats_next", "tombstones_next",
@@ -91,11 +92,7 @@ SEG_AUTO_FRAC = 0.25
 
 
 def stable_shard_col(n_shards: int):
-    return F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(n_shards)).cast("int")
-
-
-def _sha_col():
-    return F.sha2(F.encode(F.coalesce(F.col("content"), F.lit("")), "utf-8"), 256)
+    return F.pmod(F.xxhash64(*KEYS), F.lit(n_shards)).cast("int")
 
 
 def _stable_ids(pid: int):
@@ -147,21 +144,12 @@ def _delta_term_stats(
     """term_stats delta: df' = df + count(new docs' terms)
                                    - count(removed/replaced docs' terms)
     (unchanged docs — even in touched shards — contribute no df change.)
-    Same two-phase salted shape as the full build for hot-term hygiene.
+    Same two-phase salted count as the full build for hot-term hygiene.
     Writes ``term_stats_next`` (committed) and returns its n_terms."""
-
-    def term_counts(df: DataFrame, out: str) -> DataFrame:
-        ex = df.select(
-            F.explode("terms").alias("term"),
-            F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(NSALT)).alias("salt"),
-        )
-        partial = ex.groupBy("term", "salt").agg(F.count(F.lit(1)).alias("c"))
-        return partial.groupBy("term").agg(F.sum("c").cast("long").alias(out))
-
     ts = wh.read(spark, "term_stats")
     merged = (
-        ts.join(term_counts(changed_an, "cn"), "term", "full")
-        .join(term_counts(gone, "cg"), "term", "full")
+        ts.join(_term_counts(changed_an, "cn"), "term", "full")
+        .join(_term_counts(gone, "cg"), "term", "full")
         .select(
             "term",
             (
@@ -172,17 +160,7 @@ def _delta_term_stats(
         )
         .filter(F.col("df") > 0)
     )
-    obs = Observation("term_stats_next")
-    merged = merged.observe(obs, F.count(F.lit(1)).alias("n_terms"))
-    wh.write(
-        merged,
-        "term_stats_next",
-        stage="term_stats",
-        sort_by=["term"],
-        meta={"analyzed_ref": new_build_id},
-        meta_fn=lambda: {"n_terms": int(obs.get["n_terms"])},
-    )
-    return int(wh.manifest("term_stats_next")["n_terms"])
+    return _write_term_stats(wh, merged, new_build_id, dst="term_stats_next")
 
 
 def _shard_parts(root: str) -> list[int]:
@@ -224,7 +202,7 @@ def commit_delta(
       3. ``stats`` = (added, removed) analyzed frames: delta-maintain
          term_stats df and the corpus scalars into *_next tables
          (otherwise both are only restamped — they are already exact);
-      4. write the doc_stats/postings/doc_lens deltas from analyzed_delta
+      4. write the doc_stats/postings deltas from analyzed_delta
          (skipped, with the generation bump, when the delta has no rows);
       5. ``tombs``: a frame is staged as the new tombstones table,
          "drop" drops the table, None keeps the committed one;
@@ -282,18 +260,10 @@ def commit_delta(
 
     promotes: list[list[str]] = []
     if stats is not None:
-        import pyarrow as pa
-
         t1 = time.time()
         n_terms = _delta_term_stats(spark, wh, *stats, build_id)
         stage_secs["term_stats"] = round(time.time() - t1, 2)
-        wh.write_local(
-            [{"n_docs": n_docs, "sum_dl": sum_dl, "n_terms": n_terms}],
-            {"n_docs": pa.int64(), "sum_dl": pa.int64(), "n_terms": pa.int64()},
-            "corpus_stats_next",
-            stage="corpus_stats",
-            meta={"analyzed_ref": build_id},
-        )
+        _write_corpus_stats(wh, n_docs, sum_dl, n_terms, build_id, dst="corpus_stats_next")
         promotes += [["term_stats_next", "term_stats"],
                      ["corpus_stats_next", "corpus_stats"]]
         run += ["term_stats", "corpus_stats"]
@@ -305,8 +275,6 @@ def commit_delta(
                 spark, delta_df, wh, dst="doc_stats_delta")),
             ("postings", lambda: _stage_postings(
                 spark, wh, src="analyzed_delta", dst="postings_delta")),
-            ("doc_lens", lambda: _stage_doc_lens(
-                spark, delta_df, wh, STRIDE, dst="doc_lens_delta")),
         ]:
             t1 = time.time()
             write()
@@ -347,7 +315,7 @@ def commit_delta(
     elif max_gen is not None:
         am["max_gen"] = max_gen
     manifests = {"analyzed": am}
-    restamp = ["doc_stats", "postings", "doc_lens"]
+    restamp = ["doc_stats", "postings"]
     if stats is None:
         restamp += ["term_stats", "corpus_stats"]
     for t in restamp:
@@ -381,7 +349,7 @@ def _stage_analyzed_stable(
 ) -> None:
     """Stable-mode analyzed stage: ONE pass tokenizes and assigns
     (shard, within-shard rank) doc_ids — no global count pass and no
-    range-boundary sampling job (contrast _stage_analyzed's two-pass
+    range-boundary sampling job (contrast build._write_ranked's two-pass
     rank protocol), because ranks are local to each hash-pinned shard."""
     if n_shards is None:
         n_shards = default_shards(docs.count())
@@ -429,7 +397,6 @@ def incremental_build_stable(
     docs: DataFrame,
     wh: str | Warehouse,
     mode: str = "full",
-    parallel: bool = True,
     strategy: str = "shards",
     auto_compact_ratio: float | None = None,
     maintenance: str = "compact",
@@ -518,9 +485,7 @@ def incremental_build_stable(
                 "an upsert batch cannot heal it — re-run with mode='full' "
                 "and the complete corpus (or build_index force=True)"
             )
-        return build_index(
-            spark, docs, wh, parallel=parallel, doc_id_mode="stable"
-        )
+        return build_index(spark, docs, wh, doc_id_mode="stable")
     segmented = _segmented(wh)
     # delta swaps graft new shard partitions onto the COMMITTED downstream
     # tables — that is only sound if those tables are present, current-
@@ -541,8 +506,8 @@ def incremental_build_stable(
                 )
             for t in ["analyzed", "tombstones", *DOWNSTREAM_STAGES]:
                 wh.drop(t)
-            return build_index(spark, docs, wh, parallel=parallel, doc_id_mode="stable")
-        build_index(spark, docs, wh, parallel=parallel, doc_id_mode="stable")
+            return build_index(spark, docs, wh, doc_id_mode="stable")
+        build_index(spark, docs, wh, doc_id_mode="stable")
     if segmented and strategy == "shards":
         # shard-swap assumes a segment-free base (its per-shard re-rank
         # would collide with live segment rows of the same base shard)
@@ -642,7 +607,7 @@ def incremental_build_stable(
                 )
             # downstream missing/stale: heal via the full-build resume path
             # (skips the committed analyzed, rebuilds only non-current stages)
-            return build_index(spark, docs, wh, parallel=parallel, doc_id_mode="stable")
+            return build_index(spark, docs, wh, doc_id_mode="stable")
 
         wh.append_lineage_rows("incremental_tokenize", list(tok_acc.value.values()))
         live = {

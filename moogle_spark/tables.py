@@ -40,7 +40,9 @@ LOCKFILE = "_LOCK.json"
 # v3: analyzed.positions flattened to array<int> (per-doc term-major).
 # v4: postings block-max metadata stored as avgdl-independent
 #     (max_tf int, min_dl int) instead of a precomputed block_max_tf
-#     float; doc_lens partitioned by shard (shard-swappable).
+#     float.  (v4 also wrote a shard-partitioned doc_lens table, which
+#     nothing read; builds no longer write it, and an earlier v4
+#     warehouse simply keeps that directory unread.)
 FORMAT_VERSION = 4
 
 LINEAGE_SCHEMA = (
@@ -335,7 +337,7 @@ class Warehouse:
 
     # ---- partition-swap transactions (stable-id incremental) -----------
     # A shard-scoped incremental rebuild replaces only the touched shard
-    # partitions of analyzed/doc_stats/postings/doc_lens plus the whole
+    # partitions of analyzed/doc_stats/postings plus the whole
     # (small) term_stats/corpus_stats tables.  All new data is staged into
     # committed *_delta / *_next tables FIRST; then a single fsync'd
     # _TXN.json journal records every partition move, promote, and final

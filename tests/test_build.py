@@ -51,18 +51,18 @@ def test_resume_skips_committed_stages(spark, tmp_path):
     whdir = str(tmp_path / "wh")
     docs = generate_docs(spark, 60)
     info1 = build_index(spark, docs, whdir, n_shards=4)
-    assert len(info1.stages_run) == 6
+    assert len(info1.stages_run) == 5
 
     wh = Warehouse(whdir)
     analyzed_commit = wh.manifest("analyzed")["committed_at"]
     postings_rows = wh.read(spark, "postings").count()
 
-    # simulate a kill after term_stats: postings + doc_lens uncommitted
+    # simulate a kill after term_stats: postings uncommitted
     os.remove(os.path.join(wh.path("postings"), "_MANIFEST.json"))
-    os.remove(os.path.join(wh.path("doc_lens"), "_MANIFEST.json"))
+    assert not os.path.exists(wh.path("doc_lens"))
 
     info2 = build_index(spark, docs, whdir, n_shards=4)
-    assert set(info2.stages_run) == {"postings", "doc_lens"}
+    assert set(info2.stages_run) == {"postings"}
     assert set(info2.stages_skipped) == {"analyzed", "doc_stats", "term_stats", "corpus_stats"}
     # earlier stages untouched (no recompute), rebuilt stage identical
     assert wh.manifest("analyzed")["committed_at"] == analyzed_commit

@@ -3,7 +3,7 @@ re-supplying corpus content (the takedown operation; stable.py).
 
 Proves:
   * shard-swap deletion is bit-identical to a from-scratch stable build
-    of the reduced corpus (analyzed/doc_stats/doc_lens/term_stats row
+    of the reduced corpus (analyzed/doc_stats/term_stats row
     fingerprints + decoded postings),
   * segment-strategy deletion touches NO base partition (tombstones
     only) yet queries agree with the reduced-corpus scratch build,
@@ -28,7 +28,7 @@ from test_stable_incremental import (
     _table_rows_fp,
 )
 
-TABLES = ["analyzed", "doc_stats", "doc_lens", "term_stats"]
+TABLES = ["analyzed", "doc_stats", "term_stats"]
 
 
 def _del_keys(spark, n=20):

@@ -151,6 +151,8 @@ def test_search_many_enrich_parity(engine, oracle_index):
     _check_batch(got, batch, oracle_index, 5)
     assert list(zip(got["query_id"], got["rank"])) == sorted(zip(got["query_id"], got["rank"]))
     meta_cols = ["repo", "path", "commit", "lang", "doc_len"]
+    # the pinned doc_stats cache holds only what the metadata join reads
+    assert engine.doc_stats.columns == ["doc_id", *meta_cols]
     meta = engine.doc_stats.select("doc_id", *meta_cols).toPandas().set_index("doc_id")
     assert got[meta_cols].equals(meta.loc[got["doc_id"], meta_cols].reset_index(drop=True))
 
@@ -158,7 +160,10 @@ def test_search_many_enrich_parity(engine, oracle_index):
 def test_single_search_plan_has_no_query_id_exchange(engine):
     """A single search() merges with TakeOrdered before the per-query
     window, so it pays no hash shuffle on query_id (that shuffle is a
-    third Spark job per search)."""
+    third Spark job per search); an enriched one orders its k joined
+    rows without a range shuffle (a sampling job plus an exchange)."""
     plan = engine.search("hotterm0 hotterm1", k=5)._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
     assert "Exchange hashpartitioning(query_id" not in plan
+    enriched = engine.search("hotterm0 hotterm1", k=5, enrich=True)
+    assert "rangepartitioning" not in enriched._jdf.queryExecution().executedPlan().toString()

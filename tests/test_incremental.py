@@ -81,7 +81,7 @@ def test_incremental_noop_when_nothing_changed(spark, tmp_path):
     fp1 = _fingerprint(spark, wh)
     info = incremental_build(spark, docs, wh)
     assert info.stages_run == []  # true no-op: nothing rebuilt at all
-    assert len(info.stages_skipped) == 6
+    assert len(info.stages_skipped) == 5
     assert _tokenized_since(spark, wh, 0) == 0  # zero docs re-tokenized
     assert _fingerprint(spark, wh) == fp1
 

@@ -132,7 +132,7 @@ def test_segment_run_then_compact_matches_scratch(
     wh_seg = _clone(base_v1, tmp_path, "seg")
     before = {
         t: _snapshot_files(os.path.join(wh_seg, t))
-        for t in ["analyzed", "postings", "doc_stats", "doc_lens"]
+        for t in ["analyzed", "postings", "doc_stats"]
     }
 
     info = incremental_build(spark, docs_v2, wh_seg, strategy="segment")
@@ -158,7 +158,7 @@ def test_segment_run_then_compact_matches_scratch(
     # cost O(churn) even though the churn touched many shards
     after = {
         t: _snapshot_files(os.path.join(wh_seg, t))
-        for t in ["analyzed", "postings", "doc_stats", "doc_lens"]
+        for t in ["analyzed", "postings", "doc_stats"]
     }
     for t, snap in before.items():
         for rel, sig in snap.items():
@@ -192,7 +192,7 @@ def test_segment_run_then_compact_matches_scratch(
     wh = Warehouse(wh_seg)
     assert int(wh.manifest("analyzed").get("max_gen", 0)) == 0
     assert not wh.is_committed("tombstones")
-    for t in ["analyzed", "postings", "doc_stats", "doc_lens"]:
+    for t in ["analyzed", "postings", "doc_stats"]:
         shards = [
             int(d.split("=", 1)[1])
             for d in os.listdir(os.path.join(wh_seg, t))
@@ -202,7 +202,7 @@ def test_segment_run_then_compact_matches_scratch(
     assert _decoded_postings_fp(spark, wh_seg) == _decoded_postings_fp(
         spark, scratch_v2
     )
-    for t in ["analyzed", "doc_stats", "doc_lens", "term_stats", "corpus_stats"]:
+    for t in ["analyzed", "doc_stats", "term_stats", "corpus_stats"]:
         assert _table_rows_fp(spark, wh_seg, t) == _table_rows_fp(
             spark, scratch_v2, t
         ), t
@@ -358,7 +358,7 @@ def test_partial_compact_bounded_and_convergent(
     n_tombs_before = int(wh.manifest("tombstones")["n_tombs"])
     before = {
         t: _snapshot_files(os.path.join(wh_path, t))
-        for t in ["analyzed", "postings", "doc_stats", "doc_lens"]
+        for t in ["analyzed", "postings", "doc_stats"]
     }
 
     info = compact_segments(spark, wh_path, shards=sel)
@@ -366,7 +366,7 @@ def test_partial_compact_bounded_and_convergent(
 
     wh = Warehouse(wh_path)
     # selected families: no segment partitions, no tombstones left
-    for t in ["analyzed", "postings", "doc_stats", "doc_lens"]:
+    for t in ["analyzed", "postings", "doc_stats"]:
         parts = [
             int(d.split("=", 1)[1])
             for d in os.listdir(os.path.join(wh_path, t))
@@ -387,7 +387,7 @@ def test_partial_compact_bounded_and_convergent(
     # un-selected families' base partitions byte-untouched
     after = {
         t: _snapshot_files(os.path.join(wh_path, t))
-        for t in ["analyzed", "postings", "doc_stats", "doc_lens"]
+        for t in ["analyzed", "postings", "doc_stats"]
     }
     for t, snap in before.items():
         for rel, sig in snap.items():
@@ -408,7 +408,7 @@ def test_partial_compact_bounded_and_convergent(
     assert _decoded_postings_fp(spark, wh_path) == _decoded_postings_fp(
         spark, scratch_v2
     )
-    for t in ["analyzed", "doc_stats", "doc_lens", "term_stats", "corpus_stats"]:
+    for t in ["analyzed", "doc_stats", "term_stats", "corpus_stats"]:
         assert _table_rows_fp(spark, wh_path, t) == _table_rows_fp(
             spark, scratch_v2, t
         ), t
@@ -436,7 +436,7 @@ def test_merge_generations_tiered(spark, tmp_path, base_v1):
     assert n_base_tombs > 0  # v1->v2 replaced/removed docs live in base
     before = {
         t: _snapshot_files(os.path.join(wh_path, t))
-        for t in ["analyzed", "postings", "doc_stats", "doc_lens"]
+        for t in ["analyzed", "postings", "doc_stats"]
     }
 
     info = merge_generations(spark, wh_path)
@@ -448,7 +448,7 @@ def test_merge_generations_tiered(spark, tmp_path, base_v1):
     # every base partition byte-untouched
     after = {
         t: _snapshot_files(os.path.join(wh_path, t))
-        for t in ["analyzed", "postings", "doc_stats", "doc_lens"]
+        for t in ["analyzed", "postings", "doc_stats"]
     }
     for t, snap in before.items():
         for rel, sig in snap.items():
@@ -456,7 +456,7 @@ def test_merge_generations_tiered(spark, tmp_path, base_v1):
             if fam is not None and int(fam) < N_SHARDS:
                 assert after[t].get(rel) == sig, f"{t}/{rel} was rewritten"
     # no partition above generation 1 anywhere
-    for t in ["analyzed", "postings", "doc_stats", "doc_lens"]:
+    for t in ["analyzed", "postings", "doc_stats"]:
         parts = [
             int(d.split("=", 1)[1])
             for d in os.listdir(os.path.join(wh_path, t))
@@ -553,7 +553,7 @@ def test_partial_compact_and_merge_txn_recovery(
     Warehouse(wh_a)  # replays
     assert not os.path.exists(os.path.join(wh_a, "_TXN.json"))
     merge_generations(spark, wh_b)
-    for t in ["analyzed", "doc_stats", "doc_lens", "term_stats"]:
+    for t in ["analyzed", "doc_stats", "term_stats"]:
         assert _table_rows_fp(spark, wh_a, t) == _table_rows_fp(spark, wh_b, t), t
     assert _decoded_postings_fp(spark, wh_a) == _decoded_postings_fp(spark, wh_b)
     assert _table_rows_fp(spark, wh_a, "tombstones") == _table_rows_fp(
@@ -574,7 +574,7 @@ def test_partial_compact_and_merge_txn_recovery(
     assert os.path.exists(os.path.join(wh_a, "_TXN.json"))
     Warehouse(wh_a)
     compact_segments(spark, wh_b, shards=sel)
-    for t in ["analyzed", "doc_stats", "doc_lens", "term_stats", "tombstones"]:
+    for t in ["analyzed", "doc_stats", "term_stats", "tombstones"]:
         assert _table_rows_fp(spark, wh_a, t) == _table_rows_fp(spark, wh_b, t), t
     assert _decoded_postings_fp(spark, wh_a) == _decoded_postings_fp(spark, wh_b)
     _assert_engines_agree(spark, wh_a, wh_b)
@@ -616,7 +616,7 @@ def _plan(moves, deletes, promotes, drops, manifests, restamped):
     return {
         "swaps": [
             [t, f"{t}_delta", moves, deletes]
-            for t in ["analyzed", "doc_stats", "postings", "doc_lens"]
+            for t in ["analyzed", "doc_stats", "postings"]
         ],
         "promotes": [[s, s.removesuffix("_next")] for s in promotes],
         "drops": drops,
@@ -624,7 +624,7 @@ def _plan(moves, deletes, promotes, drops, manifests, restamped):
     }
 
 
-RESTAMPED = ["doc_stats", "doc_lens", "term_stats", "corpus_stats"]
+RESTAMPED = ["doc_stats", "term_stats", "corpus_stats"]
 STATS_NEXT = ["term_stats_next", "corpus_stats_next"]
 CHARACTERIZATION = [
     # segment upsert: generation 1 holds the six changed docs

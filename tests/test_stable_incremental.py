@@ -7,7 +7,7 @@ own shards — these tests prove:
   * full stable build == rank build at the search-result level,
   * incremental stable build == from-scratch stable build at the
     LOGICAL postings level (block runs may differ; decoded postings,
-    analyzed rows, term_stats, doc_stats, doc_lens, corpus scalars are
+    analyzed rows, term_stats, doc_stats, corpus scalars are
     identical),
   * untouched shards' files are NOT rewritten (byte-identical on disk),
   * the tokenizer gate holds (incremental_tokenize lineage == churn),
@@ -178,7 +178,7 @@ def test_stable_incremental_equals_scratch_and_is_shard_scoped(spark, tmp_path):
 
     before = {
         t: _snapshot_files(os.path.join(wh_inc, t))
-        for t in ["analyzed", "postings", "doc_stats", "doc_lens"]
+        for t in ["analyzed", "postings", "doc_stats"]
     }
 
     lin0 = (
@@ -200,7 +200,7 @@ def test_stable_incremental_equals_scratch_and_is_shard_scoped(spark, tmp_path):
     # SHARD SCOPE: untouched shards' files byte-untouched on disk
     after = {
         t: _snapshot_files(os.path.join(wh_inc, t))
-        for t in ["analyzed", "postings", "doc_stats", "doc_lens"]
+        for t in ["analyzed", "postings", "doc_stats"]
     }
     for t, snap in before.items():
         for rel, sig in snap.items():
@@ -213,7 +213,7 @@ def test_stable_incremental_equals_scratch_and_is_shard_scoped(spark, tmp_path):
     wh_scr = str(tmp_path / "scratch")
     build_index(spark, docs_v2, wh_scr, n_shards=N_SHARDS, doc_id_mode="stable")
     assert _decoded_postings_fp(spark, wh_inc) == _decoded_postings_fp(spark, wh_scr)
-    for t in ["analyzed", "doc_stats", "doc_lens", "term_stats", "corpus_stats"]:
+    for t in ["analyzed", "doc_stats", "term_stats", "corpus_stats"]:
         assert _table_rows_fp(spark, wh_inc, t) == _table_rows_fp(spark, wh_scr, t), t
 
 

@@ -5,7 +5,7 @@ Measures, on a 200k-doc corpus:
   * stable-mode incremental under CLUSTERED churn — the changed docs live
     in ~10% of the shards (the re-ingested-tenant / re-crawled-partition
     pattern): wall time should be ~proportional to the touched-shard
-    fraction, because postings/doc_stats/doc_lens re-encode ONLY those
+    fraction, because postings/doc_stats re-encode ONLY those
     shards (tests/test_stable_incremental.py proves the byte-identical
     untouched-shard claim; this tool measures the time),
   * stable-mode incremental under UNIFORM random churn — the honest
